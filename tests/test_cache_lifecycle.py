@@ -3,15 +3,27 @@ cached intermediates must not accumulate across registry invocations —
 a long-lived driver session evaluates hundreds of queries back to back,
 and a leaked InMemoryRelation per query churns executor storage memory.
 The contract: entering any registered query releases every persist the
-previous one tracked."""
+same thread's previous query tracked (tracking.py keeps one release list
+per thread)."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+
+from world_cup_duckdb_spark import tracking
 from world_cup_duckdb_spark.queries import (
-    _TRACKED_PERSISTS,
     REGISTRY,
     release_tracked_persists,
 )
+
+
+def _tracked_frames() -> list[DataFrame]:
+    """The DataFrames whose ``unpersist`` sits on this thread's list."""
+    return [
+        fn.__self__
+        for fn in tracking._local.releasers
+        if isinstance(getattr(fn, "__self__", None), DataFrame)
+    ]
 
 
 def test_next_query_entry_releases_previous_persists(spark, sf_dir):
@@ -19,42 +31,64 @@ def test_next_query_entry_releases_previous_persists(spark, sf_dir):
     # ext_lm_score persists its per-doc token relation for two consumers.
     df = REGISTRY["ext_lm_score"].fn(spark, sf_dir)
     df.count()
-    assert _TRACKED_PERSISTS, "ext_lm_score no longer tracks a persist"
-    tracked = list(_TRACKED_PERSISTS)
+    tracked = _tracked_frames()
+    assert tracked, "ext_lm_score no longer tracks a persist"
     assert all(t.storageLevel.useMemory for t in tracked)
     # entering the NEXT registered query releases them
     REGISTRY["op17_filter_eq"].fn(spark, sf_dir)
-    assert not _TRACKED_PERSISTS
+    assert not tracking._local.releasers
     assert all(not t.storageLevel.useMemory for t in tracked)
+
+
+def test_other_thread_entry_keeps_persists(spark, sf_dir):
+    """Two callers on one session: thread A entering a query must not
+    release thread B's in-flight persists; only B's own next entry
+    does."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def build_b():
+        release_tracked_persists()
+        REGISTRY["ext_lm_score"].fn(spark, sf_dir).count()
+        return _tracked_frames()
+
+    with ThreadPoolExecutor(1) as b, ThreadPoolExecutor(1) as a:
+        tracked = b.submit(build_b).result()
+        assert tracked, "ext_lm_score no longer tracks a persist"
+        a.submit(REGISTRY["op17_filter_eq"].fn, spark, sf_dir).result()
+        assert all(t.storageLevel.useMemory for t in tracked)
+        b.submit(REGISTRY["op17_filter_eq"].fn, spark, sf_dir).result()
+        assert all(not t.storageLevel.useMemory for t in tracked)
+        assert not b.submit(lambda: tracking._local.releasers).result()
+        a.submit(release_tracked_persists).result()
 
 
 def test_release_is_idempotent_and_safe(spark, sf_dir):
     release_tracked_persists()
     release_tracked_persists()
-    assert not _TRACKED_PERSISTS
+    assert not tracking._local.releasers
 
 
 def test_tracked_persist_release_is_thread_safe(spark):
-    """ADVICE r6 item 3: the tracked-persist list is module-global state;
-    concurrent builders must get STRUCTURAL safety (no torn list, no
-    double-unpersist crash) even though cache affinity is documented as
-    single-threaded-driver-only. Hammer tracked_persist/release from
-    several threads; the invariant is no exception and an empty list."""
+    """ADVICE r6 item 3: concurrent builders on one session must get
+    STRUCTURAL safety (no torn list, no double-unpersist crash). Hammer
+    tracked_persist/release from several threads; the invariant is no
+    exception, each thread seeing only its own persist, and an empty
+    list on every thread."""
     import threading
 
-    from world_cup_duckdb_spark.queries import (
-        _TRACKED_PERSISTS,
-        release_tracked_persists,
-        tracked_persist,
-    )
+    from world_cup_duckdb_spark.queries import tracked_persist
 
     errors = []
+    sizes = []
+    leftovers = []
 
     def worker(i):
         try:
             for _ in range(10):
                 tracked_persist(spark.range(5).selectExpr(f"id + {i} as v"))
+                sizes.append(len(tracking._local.releasers))
                 release_tracked_persists()
+            leftovers.extend(tracking._local.releasers)
         except Exception as ex:  # pragma: no cover - the failure signal
             errors.append(ex)
 
@@ -62,10 +96,13 @@ def test_tracked_persist_release_is_thread_safe(spark):
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
     release_tracked_persists()
     assert errors == []
-    assert not _TRACKED_PERSISTS
+    assert sizes == [1] * 60
+    assert leftovers == []
+    assert not tracking._local.releasers
 
 
 def test_ranged_offsets_checkpoint_blocks_release_with_query_scope(
@@ -78,8 +115,6 @@ def test_ranged_offsets_checkpoint_blocks_release_with_query_scope(
     that the next registry query's entry runs. Pin: after materializing
     a distributed-window query, checkpoint RDD storage exists; after the
     next query entry it is gone."""
-    from world_cup_duckdb_spark import tracking
-
     release_tracked_persists()
     spark.catalog.clearCache()
     sc = spark.sparkContext._jsc.sc()
@@ -90,11 +125,11 @@ def test_ranged_offsets_checkpoint_blocks_release_with_query_scope(
     base = rdd_storage_count()
     df = REGISTRY["ext_corpus_deciles"].fn(spark, sf_dir)
     df.count()
-    assert tracking._RELEASERS, "no checkpoint releaser registered"
+    assert tracking._local.releasers, "no checkpoint releaser registered"
     assert rdd_storage_count() > base, "expected live checkpoint blocks"
     # entering the NEXT registered query releases the checkpoint blocks
     REGISTRY["op17_filter_eq"].fn(spark, sf_dir)
-    assert not tracking._RELEASERS
+    assert not tracking._local.releasers
     assert rdd_storage_count() <= base
 
 
@@ -109,19 +144,18 @@ def test_ranged_private_release_handle_resolves(spark):
     """
     from pyspark.sql import functions as F
 
-    from world_cup_duckdb_spark import tracking
     from world_cup_duckdb_spark.operators.relational import _ranged
 
     release_tracked_persists()
     spark.catalog.clearCache()
     sc = spark.sparkContext._jsc.sc()
-    before_releasers = len(tracking._RELEASERS)
+    before_releasers = len(tracking._local.releasers)
     base = len(sc.getRDDStorageInfo())
 
     df = spark.range(1000).withColumn("v", F.col("id") % 13)
     _ranged(df, ["v", "id"], 4)  # eager localCheckpoint materializes now
     assert len(sc.getRDDStorageInfo()) > base, "no live checkpoint blocks"
-    assert len(tracking._RELEASERS) == before_releasers + 1, (
+    assert len(tracking._local.releasers) == before_releasers + 1, (
         "private JVM release path queryExecution().analyzed().rdd() no "
         "longer resolves — checkpoint blocks would silently leak until GC"
     )

@@ -80,6 +80,7 @@ def test_pure_plan_whitelist_is_actually_pure(spark, sf_dir):
     from bench import PURE_PLAN
 
     import world_cup_duckdb_spark.queries as Q
+    from world_cup_duckdb_spark import tracking
 
     tracker = spark.sparkContext._jsc.sc().statusTracker()
     # Prime the catalog exactly as bench.py does before measuring
@@ -96,7 +97,7 @@ def test_pure_plan_whitelist_is_actually_pure(spark, sf_dir):
         before = len(list(tracker.getJobIdsForGroup(None)))
         Q.REGISTRY[name].fn(spark, sf_dir)
         jobs = len(list(tracker.getJobIdsForGroup(None))) - before
-        persists = len(Q._TRACKED_PERSISTS)
+        persists = len(tracking._local.releasers)
         if jobs or persists:
             offenders.append((name, f"jobs={jobs}", f"persists={persists}"))
     Q.release_tracked_persists()

@@ -166,10 +166,62 @@ def test_spread_decision_is_memoized_per_plan(spark):
         )
         scale.spread_for_cpu_work(b, "k")
         assert len(scale._SPREAD_MEMO) == 2
+        # A full memo is cleared before the next entry goes in.
+        scale._SPREAD_MEMO.clear()
+        scale._SPREAD_MEMO.update(
+            ((None, i), 0) for i in range(scale._SPREAD_MEMO_MAX)
+        )
+        scale.spread_for_cpu_work(a, "k")
+        assert len(scale._SPREAD_MEMO) == 1
     finally:
         a.unpersist()
         b.unpersist()
         scale._SPREAD_MEMO.clear()
+
+
+def test_compaction_clears_stale_spread_estimate(spark, tmp_path):
+    """compact_parquet rewrites a path in place: a re-read keeps the
+    analyzed-plan hash the split-estimate memo is keyed on, but not the
+    file layout, so the memoized estimate must not survive it."""
+    from world_cup_duckdb_spark.operators import scale
+
+    path = str(tmp_path / "t")
+    spark.range(0, 64, 1, 16).write.parquet(path)
+
+    def memo_key():
+        df = spark.read.parquet(path)
+        scale.spread_for_cpu_work(df, "id")
+        return (
+            spark.sparkContext.applicationId,
+            df._jdf.queryExecution().analyzed().semanticHash(),
+        )
+
+    try:
+        key = memo_key()
+        assert scale._SPREAD_MEMO[key] == 16
+        scale.compact_parquet(spark, path)
+        assert key not in scale._SPREAD_MEMO
+        assert memo_key() == key
+        assert scale._SPREAD_MEMO[key] == 1
+    finally:
+        scale._SPREAD_MEMO.clear()
+
+
+def test_stage_token_counts_escapes_stopword_literals(spark, monkeypatch):
+    """The SQL-string stopword IN-list must match the Column-form
+    stopword_count for words holding a quote or a backslash."""
+    from world_cup_duckdb_spark.operators import text
+
+    monkeypatch.setitem(text.STOPWORDS, "en", ("it's", "a\\b", "\\'"))
+    df = spark.createDataFrame(
+        [(1, "it's a\\b \\' its ab a\\\\b it''s")], "doc_id int, text string"
+    )
+    staged = text.stage_token_counts(df, keep=("doc_id",), langs=("en",))
+    expected = df.select(
+        text.stopword_count(text.tokens("text"), "en").alias("en_n")
+    )
+    assert staged.select("en_n").collect() == expected.collect()
+    assert expected.first()["en_n"] == 3
 
 
 def test_connected_components_raises_past_iteration_budget(spark):

@@ -59,6 +59,15 @@ def prefixed_key(prefix: str, n: Column | str) -> Column:
     return F.concat(F.lit(prefix), n.cast("string"))
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a quoted Spark SQL string literal. Backslashes are
+    escaped first (the parser processes backslash escapes in literals,
+    ``spark.sql.parser.escapedStringLiterals=false`` by default), then
+    single quotes are doubled, so no value can change the literal's
+    content or break the parse."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
 def capitalize_first(c: Column | str) -> Column:
     """Upper-case the first letter, keep the rest as-is (OP37).
 

@@ -220,6 +220,9 @@ def compact_parquet(
     fs.rename(p, jvm.org.apache.hadoop.fs.Path(backup))
     fs.rename(jvm.org.apache.hadoop.fs.Path(stage), p)
     fs.delete(jvm.org.apache.hadoop.fs.Path(backup), True)
+    # The rewritten path keeps its analyzed-plan hash but not its split
+    # layout, so memoized spread estimates over it are stale.
+    _SPREAD_MEMO.clear()
     files_after = sum(
         1
         for st in fs.listStatus(p)
@@ -236,8 +239,10 @@ def compact_parquet(
 #: function of the resolved input within a session, so one probe per
 #: (session, input plan) is enough (VERDICT r12 item 3). Perf-only
 #: state: a stale entry can only change a repartition decision, never
-#: results.
+#: results. Cleared whole when it reaches ``_SPREAD_MEMO_MAX`` entries
+#: and whenever ``compact_parquet`` rewrites a path.
 _SPREAD_MEMO: dict = {}
+_SPREAD_MEMO_MAX = 1024
 
 
 def spread_for_cpu_work(df: DataFrame, key_col: str) -> DataFrame:
@@ -299,6 +304,8 @@ def spread_for_cpu_work(df: DataFrame, key_col: str) -> DataFrame:
         except Exception:
             return df
         if memo_key is not None:
+            if len(_SPREAD_MEMO) >= _SPREAD_MEMO_MAX:
+                _SPREAD_MEMO.clear()
             _SPREAD_MEMO[memo_key] = est_splits
     if est_splits < target:
         return df.repartition(target, F.col(key_col))

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from world_cup_duckdb_spark.functions.strings import sql_string
+
 #: Tiny per-language stopword inventories for the n-gram/stopword
 #: language-ID heuristic. Deliberately small and fixed: the operator's
 #: job is the *shape* (tokenize → per-language evidence → argmax), the
@@ -90,7 +92,7 @@ def stage_token_counts(df, keep, langs=_LANG_ORDER, text_col="text", keep_text=F
         "size(__toks) AS n_tokens",
         *[
             "size(filter(__toks, t -> t IN ({w}))) AS `{lang}_n`".format(
-                w=", ".join(f"'{s}'" for s in STOPWORDS[lang]), lang=lang
+                w=", ".join(map(sql_string, STOPWORDS[lang])), lang=lang
             )
             for lang in langs
         ],

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from world_cup_duckdb_spark.functions.strings import sql_string
+
 #: 2^32 — the md5-prefix coin space (first 8 hex digits).
 COIN_SPACE = 4294967296.0
 
@@ -110,15 +112,8 @@ def temperature_mix(
         f"CASE WHEN _c > 0 THEN LEAST({max_upsample!r}D, {m})"
         f" ELSE 1.0D END AS _m",
     )
-    # SQL string literal: escape backslashes (the parser processes
-    # backslash escapes in literals — escapedStringLiterals=false is the
-    # default, so a bare '\' would silently change the md5 coin input vs
-    # the old F.lit(salt) form; ADVICE r12) and then embedded single
-    # quotes (doubling), so an unusual salt can't change the hash input
-    # or break parse.
-    salt_sql = salt.replace("\\", "\\\\").replace("'", "''")
     coin = (
-        f"CAST(conv(substring(md5(concat('{salt_sql}',"
+        f"CAST(conv(substring(md5(concat({sql_string(salt)},"
         f" CAST(`{id_col}` AS STRING))), 1, 8), 16, 10) AS BIGINT)"
     )
     threshold = (
@@ -197,11 +192,7 @@ def epoch_shuffle(
     # composite key is INJECTIVE: with a bare "-" join, ids containing
     # "-" can collide (("a-1","2") vs ("a","1-2")) and the colliding
     # rows would draw correlated shard/position every epoch.
-    # Escaped as a SQL string literal (backslash doubling first — the
-    # parser processes backslash escapes in literals, ADVICE r12 — then
-    # quote doubling), matching temperature_mix's salt handling.
-    salt_sql = salt.replace("\\", "\\\\").replace("'", "''")
-    hash_parts = [f"'{salt_sql}'", "CAST(epoch AS STRING)"]
+    hash_parts = [sql_string(salt), "CAST(epoch AS STRING)"]
     for c in quoted_ids:
         s = f"CAST({c} AS STRING)"
         hash_parts += ["'-'", f"CAST(LENGTH({s}) AS STRING)", "':'", s]

@@ -23,6 +23,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from world_cup_duckdb_spark import tracking
+
 
 @dataclass(frozen=True)
 class Query:
@@ -34,67 +36,29 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-#: Per-query persisted intermediates awaiting release. A long-lived
-#: session (the round driver evaluates hundreds of registry queries
-#: back to back) would otherwise accumulate every query's cached
-#: relations in executor storage memory. Entries are released when the
-#: NEXT registered query starts building — by which point the previous
-#: query's result has been materialized by the caller. (Unpersisting a
-#: relation that still backs an uncollected plan is always safe in
-#: Spark — it recomputes — so an unusual build-two-then-collect-both
-#: caller loses cache hits, never correctness.)
-#:
-#: CONCURRENCY CONTRACT: this is module-global state keyed on "the next
-#: registered query starts", which assumes the SINGLE-THREADED
-#: build-then-collect driver loop that both the round driver and
-#: bench.py actually run. A caller that builds registry queries from
-#: multiple threads gets structural safety (the list itself is guarded
-#: by ``_PERSIST_LOCK``) but NOT cache affinity: thread A entering a
-#: query releases thread B's in-flight persists, demoting B's cache
-#: hits to recomputes. That degrades performance, never correctness —
-#: Spark recomputes unpersisted relations — and is the accepted trade
-#: for keeping the fast path free of per-query bookkeeping objects.
-_TRACKED_PERSISTS: list[DataFrame] = []
-
-import threading as _threading  # noqa: E402
-
-_PERSIST_LOCK = _threading.Lock()
-
 
 def tracked_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` whose lifetime is scoped to the current registry
-    query: the cache entry is dropped when the next registered query
-    begins, instead of living for the whole session."""
+    query: the cache entry is dropped when this thread's next registered
+    query begins, instead of living for the whole session (an unpersisted
+    relation still backing an uncollected plan just recomputes)."""
     df = df.persist()
-    with _PERSIST_LOCK:
-        _TRACKED_PERSISTS.append(df)
+    tracking.track_release(df.unpersist)
     return df
 
 
 def release_tracked_persists() -> None:
-    """Unpersist every intermediate cached via :func:`tracked_persist`,
-    then run operator-registered release callbacks (checkpoint blocks
-    and other state the DataFrame API can't drop — see tracking.py)."""
-    from world_cup_duckdb_spark import tracking
-
+    """Run and clear this thread's release list: unpersist its tracked
+    intermediates and free the checkpoint blocks and other state the
+    DataFrame API can't drop (see tracking.py)."""
     tracking.release_all()
-    while True:
-        with _PERSIST_LOCK:
-            if not _TRACKED_PERSISTS:
-                return
-            df = _TRACKED_PERSISTS.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            # Session already stopped — nothing left to release.
-            pass
 
 
 def register(name: str, oracle: str | None = None):
     """Decorator: add a (spark, sf_dir) -> DataFrame callable to the
     registry, optionally with its DuckDB oracle SQL. Entry into any
-    registered query releases the PREVIOUS query's tracked persists,
-    bounding cache accumulation to one query's working set."""
+    registered query releases the state this thread's PREVIOUS query
+    tracked, bounding cache accumulation to one query's working set."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         @functools.wraps(fn)
