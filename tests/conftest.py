@@ -8,8 +8,9 @@ SF_SMOKE = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
 #: Suite tiers (VERDICT r10 item 6). Per-file walls measured 2026-08-16
 #: on this box (local[8] test session, serial):
-#:   slow tier — the 336-key DuckDB-oracle parity sweep (test_parity,
-#:     ~12 min) and the adversarial replication harness (test_scale).
+#:   slow tier — the DuckDB-oracle parity sweep over every exported
+#:     key (test_parity, ~12 min) and the adversarial replication
+#:     harness (test_scale).
 #:   integration tier — multi-minute end-to-end lifecycles:
 #:     worldcup DAG 334 s, streaming 138 s, llm_ops 136 s,
 #:     similarity 112 s, properties 115 s, determinism 76 s,

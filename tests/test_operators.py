@@ -563,48 +563,71 @@ def test_fetch_cached_hit_miss_and_atomic_publish(tmp_path):
     assert hit4 and open(p4).read() == "x,y\n1,2\n"
 
 
-def test_driver_key_order_leads_with_never_verified_keys():
+def test_driver_key_order_is_pinned_head_then_registration_order():
     """The round driver evaluates queries() in dict order under a bounded
-    budget (~the first 50 keys), so ordering IS coverage policy. Round-3
-    policy: every key the driver already verified in rounds 1-2
-    (DRIVER_VERIFIED) is demoted behind every never-verified key, so each
-    round's sample window lands entirely on keys with no CORRECTNESS row
-    yet."""
+    budget (~the first 50 keys), so ordering IS coverage policy: the
+    export is DRIVER_HEAD, then every other oracled key in registration
+    order, and only oracled keys are exported."""
     from world_cup_duckdb_spark.queries import (
-        DRIVER_EXCLUDED,
-        DRIVER_VERIFIED,
+        DRIVER_HEAD,
         REGISTRY,
-        queries,
         oracle_sql,
+        queries,
     )
 
     names = list(queries())
-    # The driver-facing export is the registry minus the documented
-    # exclusions (keys that can never go green: no-oracle-by-design),
-    # and every exported key MUST carry an oracle — the r7 contract
-    # that no driver sample can land on a rows-only row again.
-    assert set(names) == set(REGISTRY) - DRIVER_EXCLUDED
-    assert set(oracle_sql()) == set(names)
-    assert DRIVER_EXCLUDED <= set(REGISTRY)
-    # All §2 ops are already driver-green; the verified set must be real
-    # registry keys (a rename upstream would silently shrink coverage).
-    assert DRIVER_VERIFIED <= set(REGISTRY), DRIVER_VERIFIED - set(REGISTRY)
-    n_unverified = len(
-        set(REGISTRY) - DRIVER_VERIFIED - DRIVER_EXCLUDED
-    )
-    head = names[:n_unverified]
-    assert all(n not in DRIVER_VERIFIED for n in head), [
-        n for n in head if n in DRIVER_VERIFIED
+    oracled = {n for n, q in REGISTRY.items() if q.oracle is not None}
+    assert set(names) == oracled
+    assert set(oracle_sql()) == set(queries())
+    assert list(oracle_sql()) == names
+    # Head names are unique, registered and oracled, and lead the export.
+    assert len(set(DRIVER_HEAD)) == len(DRIVER_HEAD)
+    assert set(DRIVER_HEAD) <= oracled, set(DRIVER_HEAD) - oracled
+    assert names[:len(DRIVER_HEAD)] == list(DRIVER_HEAD)
+    # The rest follow registration order.
+    assert names[len(DRIVER_HEAD):] == [
+        n for n in REGISTRY if n in oracled and n not in DRIVER_HEAD
     ]
-    # Every unverified key must sit strictly before every verified key —
-    # the driver's ~50-key window then lands on keys needing evidence for
-    # as long as any remain (DRIVER_VERIFIED derives from the committed
-    # CORRECTNESS files, so this property self-maintains round to round).
-    if n_unverified:
-        first_verified = min(
-            i for i, n in enumerate(names) if n in DRIVER_VERIFIED
-        )
-        assert first_verified == n_unverified, names[:first_verified + 1][-3:]
+
+
+def test_registry_export_opens_no_repository_file():
+    """Importing the driver contract and exporting queries()/oracle_sql()
+    must not read anything in the checkout besides Python sources: the
+    export order cannot depend on which artifacts a checkout carries."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    probe = (
+        "import json, os, sys\n"
+        "opened = []\n"
+        "def hook(event, args):\n"
+        "    if event == 'open' and isinstance(args[0], (str, bytes)):\n"
+        "        opened.append(os.fsdecode(args[0]))\n"
+        "sys.addaudithook(hook)\n"
+        "import __spark_entry__ as e\n"
+        "e.queries(); e.oracle_sql()\n"
+        "print(json.dumps(opened))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-B", "-c", probe],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    opened = {
+        os.path.realpath(root / p) for p in json.loads(out.splitlines()[-1])
+    }
+    in_repo = sorted(
+        p for p in opened
+        if Path(p).is_relative_to(root)
+        and not p.endswith((".py", ".pyc"))
+    )
+    assert in_repo == [], in_repo
 
 
 def test_surrogate_key_distributed_equals_global_window(spark):

@@ -2,7 +2,6 @@ from world_cup_duckdb_spark.functions.strings import (
     bounded_one_partition,
     capitalize_first,
     dec,
-    md5_bucket,
     prefixed_key,
     singularize,
 )
@@ -11,7 +10,6 @@ __all__ = [
     "bounded_one_partition",
     "capitalize_first",
     "dec",
-    "md5_bucket",
     "prefixed_key",
     "singularize",
 ]

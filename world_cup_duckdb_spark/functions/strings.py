@@ -90,30 +90,6 @@ def singularize(c: Column | str) -> Column:
     return F.when(c.endswith("s"), c.substr(F.lit(1), F.length(c) - 1)).otherwise(c)
 
 
-def md5_bucket(c: Column | str, seed: int | Column = 0) -> Column:
-    """Portable uniform hash: ``md5(seed || ':' || value)`` as a hex string.
-
-    Used by the dedup/sketch extension operators (MinHash, SimHash,
-    fingerprinting). md5 is chosen deliberately over the engine-native
-    ``xxhash64``: it produces identical values in any engine (DuckDB,
-    Trino, Spark), which makes sketch outputs portable and differentially
-    testable. Min/ordering over the hex strings is a valid uniform random
-    permutation for MinHash purposes.
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    seed = F.lit(seed) if isinstance(seed, int) else seed
-    return F.md5(F.concat(seed.cast("string"), F.lit(":"), c.cast("string")))
-
-
-def hex_nibble(hexcol: Column, pos: int) -> Column:
-    """Value 0-15 of the hex digit at 1-based ``pos`` — portable bit source
-    (DuckDB equivalent: ``strpos('0123456789abcdef', substr(h, pos, 1)) - 1``).
-    """
-    return (
-        F.instr(F.lit("0123456789abcdef"), F.substring(hexcol, pos, 1)) - 1
-    ).cast("int")
-
-
 def bounded_one_partition(anchor):
     """Constant-zero, NON-FOLDABLE window partition key for windows that
     are deliberately global over a BOUNDED relation (per-group stats,

@@ -6,7 +6,7 @@ over the `documents` table. All pure built-in expressions (split /
 higher-order array functions / md5) — JVM-side, codegen-able, no Python in
 the row path, so they scale linearly with input splits at 100 TB.
 
-Portability: hashes are md5-based (functions/strings.py:md5_bucket
+Portability: hashes are md5-based (queries/ext_dedup.py:split_bucket_sql
 rationale) so every derived value is reproducible in any engine — the
 DuckDB oracles in queries/ext_text.py mirror these expressions exactly.
 """
@@ -42,10 +42,6 @@ def stopword_count(toks: Column, lang: str) -> Column:
     """Number of tokens that are stopwords of ``lang`` (JVM higher-order
     filter — no explode, no shuffle)."""
     return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-
-
-def lang_scores(toks: Column) -> dict[str, Column]:
-    return {lang: stopword_count(toks, lang) for lang in _LANG_ORDER}
 
 
 def predict_lang(scores: dict[str, Column]) -> Column:
@@ -130,14 +126,6 @@ def char_shingles(text: Column | str, n: int = 3) -> Column:
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def rolling_fingerprint(toks: Column, seed: int, n: int = 3) -> Column:
-    """Document fingerprint: min over md5'd ``n``-word shingles (a
-    1-hash MinHash — the winnowing-style content fingerprint). Seeded so
-    k independent fingerprints can be combined. Null for documents with
-    fewer than ``n`` tokens."""
-    return fingerprint_from_shingles(word_shingles(toks, n), seed)
 
 
 def bpe_initial_repr(word: Column | str) -> Column:

@@ -229,7 +229,7 @@ def ext_bpe_merges16(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential-equivalence across multiple candidate pages and
     soundness-cap trims, not just the first one — the oracled evidence
     class that replaced the driver slot of the no-oracle production
-    entry (queries/__init__.py DRIVER_EXCLUDED)."""
+    entry (keys without an oracle are not exported to the driver)."""
     d = load_tables(spark, sf_dir)["documents"]
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -261,9 +261,9 @@ def ext_bpe_merges_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pass cost, is what caps vocabulary size, and this is the mode
     that makes ~30k-rule production vocabularies feasible.
 
-    NO SQL ORACLE by design — and therefore EXCLUDED from the
-    driver-facing queries()/oracle_sql() export (queries/__init__.py
-    DRIVER_EXCLUDED, VERDICT r6 item 2): a rows-only row can never go
+    NO SQL ORACLE by design — and therefore not exported by the
+    driver-facing queries()/oracle_sql() (keys without an oracle are
+    not exported, VERDICT r6 item 2): a rows-only row can never go
     green, so keeping it in the driver order would re-burn one of the
     ~50 per-round correctness samples forever. It stays in REGISTRY for
     bench.py and local harnesses. Rationale for the missing oracle: the

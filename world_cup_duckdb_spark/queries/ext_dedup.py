@@ -36,6 +36,53 @@ _SHINGLES_SQL = """
            ELSE [] END
 """
 
+_CLUSTER_CTES = f"""corpus AS ({_CORPUS_SQL}),
+    tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
+    sh AS (
+      SELECT doc_id, unnest(list_distinct({_SHINGLES_SQL})) AS shingle
+      FROM tok
+    ),
+    seeded AS (
+      SELECT doc_id, s.seed,
+             md5(CAST(s.seed AS VARCHAR) || ':' || shingle) AS h
+      FROM sh CROSS JOIN (SELECT unnest(range(0, 2)) AS seed) s
+    ),
+    sigs AS (
+      SELECT doc_id, seed,
+             MIN(substr(h, 1, 8)) AS m0, MIN(substr(h, 9, 8)) AS m1,
+             MIN(substr(h, 17, 8)) AS m2, MIN(substr(h, 25, 8)) AS m3
+      FROM seeded GROUP BY doc_id, seed
+    ),
+    bands AS (
+      SELECT doc_id, CAST(seed * 2 AS INT) AS band, m0 || m1 AS band_key FROM sigs
+      UNION ALL
+      SELECT doc_id, CAST(seed * 2 + 1 AS INT) AS band, m2 || m3 FROM sigs
+    ),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a
+      JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+                  AND a.doc_id < b.doc_id
+    ),
+    edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM cand
+      UNION
+      SELECT doc_b, doc_a FROM cand
+    ),
+    reach(src, dst) AS (
+      SELECT src, dst FROM edges
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    ),
+    comp AS (
+      SELECT src AS doc_id, CAST(LEAST(src, MIN(dst)) AS BIGINT) AS cluster_id
+      FROM reach GROUP BY src
+    ),
+    members AS (
+      SELECT c.doc_id, COALESCE(r.cluster_id, c.doc_id) AS cluster_id
+      FROM corpus c LEFT JOIN comp r ON c.doc_id = r.doc_id
+    )"""
+
 
 @register(
     "ext_dedup_exact",
@@ -738,47 +785,8 @@ def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE corpus AS ({_CORPUS_SQL}),
-    tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES_SQL})) AS shingle
-      FROM tok
-    ),
-    seeded AS (
-      SELECT doc_id, s.seed,
-             md5(CAST(s.seed AS VARCHAR) || ':' || shingle) AS h
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 2)) AS seed) s
-    ),
-    sigs AS (
-      SELECT doc_id, seed,
-             MIN(substr(h, 1, 8)) AS m0, MIN(substr(h, 9, 8)) AS m1,
-             MIN(substr(h, 17, 8)) AS m2, MIN(substr(h, 25, 8)) AS m3
-      FROM seeded GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, CAST(seed * 2 AS INT) AS band, m0 || m1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, CAST(seed * 2 + 1 AS INT) AS band, m2 || m3 FROM sigs
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM cand
-      UNION
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    )
-    SELECT src AS doc_id,
-           CAST(LEAST(src, MIN(dst)) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY src
+    WITH RECURSIVE {_CLUSTER_CTES}
+    SELECT doc_id, cluster_id FROM comp
     """,
 )
 def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2207,23 +2215,15 @@ def ext_lsh_bucket_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.crossJoin(capped_pairs).crossJoin(star)
 
 
-def quality_expr():
-    """Shared length/stopword quality score over stage_token_counts
-    columns (n_tokens, en_n) — ONE definition consumed by
-    ext_cluster_best_copy AND the fused corpus-prep pipeline
+def quality_sql() -> str:
+    """Shared length/stopword quality score as a Spark SQL fragment over
+    stage_token_counts columns (n_tokens, en_n) — ONE definition
+    consumed by ext_cluster_best_copy AND the fused corpus-prep pipeline
     (queries/ext_pipeline.py), so the canonical-selection policy cannot
     silently diverge between the per-stage query and the composition.
-    Parses the single SQL spelling (:func:`quality_sql`) — one py4j
-    round trip instead of eight Column-builder calls (r13, the
-    minhash_signatures r12 rationale)."""
-    return F.expr(quality_sql())
-
-
-def quality_sql() -> str:
-    """The quality score as a Spark SQL fragment over stage_token_counts
-    columns — the selectExpr-form twin of :func:`quality_expr` (``D``
-    suffixes pin DOUBLE literals; a bare ``1.0`` parses as DECIMAL in
-    Spark SQL, unlike ``F.lit(1.0)``)."""
+    Parsed as one expression: one py4j round trip instead of eight
+    Column-builder calls (``D`` suffixes pin DOUBLE literals; a bare
+    ``1.0`` parses as DECIMAL in Spark SQL, unlike ``F.lit(1.0)``)."""
     return (
         "least(1.0D, n_tokens / 200.0D) * 0.5D"
         " + least(1.0D, (en_n / CAST(n_tokens AS DOUBLE)) * 8.0D) * 0.5D"
@@ -2231,7 +2231,7 @@ def quality_sql() -> str:
 
 
 def quality_scored_sql(src: str = "corpus") -> str:
-    """DuckDB twin of :func:`quality_expr` as a (doc_id, q) subquery
+    """DuckDB twin of :func:`quality_sql` as a (doc_id, q) subquery
     over ``src`` — the single SQL spelling of the quality policy."""
     from world_cup_duckdb_spark.operators.text import STOPWORDS
 
@@ -2252,53 +2252,8 @@ def quality_scored_sql(src: str = "corpus") -> str:
 
 def _best_copy_oracle() -> str:
     return f"""
-    WITH RECURSIVE corpus AS ({_CORPUS_SQL}),
-    tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES_SQL})) AS shingle
-      FROM tok
-    ),
-    seeded AS (
-      SELECT doc_id, s.seed,
-             md5(CAST(s.seed AS VARCHAR) || ':' || shingle) AS h
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 2)) AS seed) s
-    ),
-    sigs AS (
-      SELECT doc_id, seed,
-             MIN(substr(h, 1, 8)) AS m0, MIN(substr(h, 9, 8)) AS m1,
-             MIN(substr(h, 17, 8)) AS m2, MIN(substr(h, 25, 8)) AS m3
-      FROM seeded GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, CAST(seed * 2 AS INT) AS band, m0 || m1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, CAST(seed * 2 + 1 AS INT) AS band, m2 || m3 FROM sigs
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM cand
-      UNION
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS doc_id, CAST(LEAST(src, MIN(dst)) AS BIGINT) AS cluster_id
-      FROM reach GROUP BY src
-    ),
+    WITH RECURSIVE {_CLUSTER_CTES},
     scored AS ({quality_scored_sql("corpus")}
-    ),
-    members AS (
-      SELECT c.doc_id, COALESCE(r.cluster_id, c.doc_id) AS cluster_id
-      FROM corpus c LEFT JOIN comp r ON c.doc_id = r.doc_id
     ),
     sel AS (
       SELECT m.cluster_id, m.doc_id, s.q,
@@ -2344,7 +2299,7 @@ def ext_cluster_best_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = minhash_bands(corpus, num_hashes=8, band_size=2).transform(tracked_persist)
     clusters = connected_components(lsh_star_edges(bands))
     counted = stage_token_counts(corpus, keep=("doc_id",), langs=("en",))
-    scored = counted.select("doc_id", quality_expr().alias("q"))
+    scored = counted.select("doc_id", F.expr(quality_sql()).alias("q"))
     members = (
         corpus.select("doc_id")
         .join(clusters, "doc_id", "left")
@@ -2367,54 +2322,6 @@ def ext_cluster_best_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLUSTER_CTES = f"""corpus AS ({_CORPUS_SQL}),
-    tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES_SQL})) AS shingle
-      FROM tok
-    ),
-    seeded AS (
-      SELECT doc_id, s.seed,
-             md5(CAST(s.seed AS VARCHAR) || ':' || shingle) AS h
-      FROM sh CROSS JOIN (SELECT unnest(range(0, 2)) AS seed) s
-    ),
-    sigs AS (
-      SELECT doc_id, seed,
-             MIN(substr(h, 1, 8)) AS m0, MIN(substr(h, 9, 8)) AS m1,
-             MIN(substr(h, 17, 8)) AS m2, MIN(substr(h, 25, 8)) AS m3
-      FROM seeded GROUP BY doc_id, seed
-    ),
-    bands AS (
-      SELECT doc_id, CAST(seed * 2 AS INT) AS band, m0 || m1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, CAST(seed * 2 + 1 AS INT) AS band, m2 || m3 FROM sigs
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM cand
-      UNION
-      SELECT doc_b, doc_a FROM cand
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS doc_id, CAST(LEAST(src, MIN(dst)) AS BIGINT) AS cluster_id
-      FROM reach GROUP BY src
-    ),
-    members AS (
-      SELECT c.doc_id, COALESCE(r.cluster_id, c.doc_id) AS cluster_id
-      FROM corpus c LEFT JOIN comp r ON c.doc_id = r.doc_id
-    )"""
-
-
 def _split_sql(key: str) -> str:
     """Portable 10-bucket split of md5('0:' || key): two leading hex
     nibbles mod 10, then 8/1/1 train/val/test."""
@@ -2428,27 +2335,22 @@ def _split_sql(key: str) -> str:
     )
 
 
-def split_bucket(key):
+def split_bucket(key: str):
     """Spark twin of :func:`_split_sql`'s bucket arithmetic: the 0-9
     md5-nibble bucket of a key column — ONE definition for
-    ext_split_leakage and the fused pipeline's train gate. String keys
-    parse the SQL spelling (:func:`split_bucket_sql`, one py4j round
-    trip — r13); Column keys keep the builder form."""
-    if isinstance(key, str):
-        return F.expr(split_bucket_sql(f"`{key}`"))
-    from world_cup_duckdb_spark.functions.strings import (
-        hex_nibble,
-        md5_bucket,
-    )
-
-    h = md5_bucket(key)
-    return (hex_nibble(h, 1) * 16 + hex_nibble(h, 2)) % 10
+    ext_split_leakage and the fused pipeline's train gate, parsed from
+    the SQL spelling (:func:`split_bucket_sql`, one py4j round trip)."""
+    return F.expr(split_bucket_sql(f"`{key}`"))
 
 
 def split_bucket_sql(key_sql: str) -> str:
     """The 0-9 md5-nibble bucket as a Spark SQL fragment over the
-    (already-quoted) key expression — faithful transcription of
-    md5_bucket(seed=0) + hex_nibble(1)/hex_nibble(2) arithmetic."""
+    (already-quoted) key expression: md5('0:' || key), then the first
+    two hex nibbles as a byte mod 10. md5 is chosen deliberately over
+    the engine-native ``xxhash64``: it produces identical values in any
+    engine (DuckDB, Trino, Spark), so the split — like every md5-based
+    sketch in the dedup/text operators — is portable and differentially
+    testable against the DuckDB oracle."""
     h = f"md5(concat(CAST(0 AS STRING), ':', CAST({key_sql} AS STRING)))"
     n1 = f"CAST(instr('0123456789abcdef', substring({h}, 1, 1)) - 1 AS INT)"
     n2 = f"CAST(instr('0123456789abcdef', substring({h}, 2, 1)) - 1 AS INT)"
@@ -2492,9 +2394,8 @@ def ext_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     each mode is a map-side split assignment plus one cluster-keyed
     count-distinct aggregation — uniform keys, two small reductions, no
     joins beyond the label computation. The split hash is the portable
-    md5-nibble bucket (functions/strings.py:md5_bucket rationale), so
+    md5-nibble bucket (:func:`split_bucket_sql` rationale), so
     both engines assign identical splits."""
-    from world_cup_duckdb_spark.functions.strings import hex_nibble, md5_bucket
     from world_cup_duckdb_spark.operators.dedup import (
         connected_components,
         lsh_star_edges,

@@ -3,7 +3,7 @@
 Not reference-derived (the reference has no text ops) — these are the
 training-data-pipeline operators BASELINE.json's north star calls for,
 backed by operators/text.py. Oracles mirror the md5/list expressions
-exactly (portable hashing — see functions/strings.py:md5_bucket).
+exactly (portable hashing — see queries/ext_dedup.py:split_bucket_sql).
 """
 
 from __future__ import annotations
