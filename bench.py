@@ -4,8 +4,12 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Timing excludes session startup and the first warm-up action (JVM/codegen
-warm-up), includes full query execution to a counted/materialized result.
+Rep policy: every rep of every query builds its plan through the
+registry and writes it to the noop sink, so a rep times Python plan
+construction, Catalyst and full execution together. The per-query
+figure is the MIN over $BENCH_REPS reps (default 7) after one warm-up
+rep. Timing excludes session startup and the first warm-up action
+(JVM/codegen warm-up).
 """
 
 from __future__ import annotations
@@ -57,182 +61,104 @@ EXTENDED = [
     "ext_span_decontaminate",
 ]
 
-#: Plan reuse for STATELESS queries (VERDICT r10 item 2): these queries
-#: build pure lazy plans — no staged state, no tracked persists, no
-#: eager build-time jobs — so re-running one means re-executing the
-#: SAME logical plan, and a production engine (or any caller holding
-#: the DataFrame) pays the Python-side plan construction ONCE per query
-#: template, exactly as DuckDB pays its (sub-ms) parse once per
-#: prepared statement. Re-building per rep charged 0.02-0.35 s/query of
-#: pure py4j round-trip chatter — driver-side API traffic, not engine
-#: work, the one cost class that is an artifact of the Python binding
-#: rather than the plan. Build cost is still measured and reported
-#: separately per query (build_sec in the JSON), and every STATEFUL
-#: query (ext_dedup_minhash, ext_corpus_datacard,
-#: ext_corpus_prep_pipeline — tracked persists / eager build jobs)
-#: still rebuilds every rep: the r7 every-rep-cold decision stands.
-#: ext_bloom_semijoin joined the tier in r12: its fused single-broadcast
-#: form (bloom_semijoin_state) dropped the tracked persist, so its build
-#: is a pure lazy plan now.
-#: ext_dedup_minhash joined in r13: the r12 SHUFFLE_HASH pair join made
-#: both self-join sides share the cap window's (band, band_key)
-#: exchange, so the r5-era bands persist became a redundant second
-#: materialization and was dropped (queries/ext_dedup.py) — the build
-#: is a pure lazy plan now. Its r12→r13 rep numbers therefore mix
-#: policies exactly like bloom's did in r12 (BENCH_r12 reps rebuilt per
-#: rep; r13 reps reuse the session plan); OPTIMIZATION_r13.md carries
-#: both the old-policy (build+exec) and new-policy numbers.
-#: Membership is machine-checked: tests/test_harness.py builds each
-#: member in a fresh state and fails the whitelist if a build triggers
-#: a Spark job or registers a tracked persist.
-PURE_PLAN = frozenset(HEADLINE[:10]) | frozenset({
-    "ext_sessionize_batch",
-    "ext_ann_bruteforce",
-    "ext_tfidf",
-    "ext_quality_filter_pipeline",
-    "ext_bloom_semijoin",
-    "ext_dedup_minhash",
-    "ext_url_dedup",
-    "ext_hybrid_rrf",
-    "ext_mmr_diversify",
-    "ext_hapax_stats",
-    "ext_dup_span_extract",
-    "ext_span_decontaminate",
-})
+#: Timing-policy tag embedded in the JSON payload, so artifacts measured
+#: under different rep semantics cannot be compared silently. rebuild-v4:
+#: every rep of every query builds its plan and executes it, as DuckDB
+#: parses and plans its SQL in every rep of the oracle side.
+METHODOLOGY = "rebuild-v4"
 
-#: Methodology tag embedded in the JSON payload (ADVICE r11): the
-#: pure-plan reuse policy changed what a rep times for whitelisted
-#: queries starting with BENCH_r11, so artifacts self-label the policy
-#: and a cross-round comparison mixing policies is detectable instead
-#: of silent. Bump when the timing policy changes meaning again.
-#: v3 (r13): ext_dedup_minhash entered PURE_PLAN (see its whitelist
-#: note above) — its reps are not comparable to pure-plan-v2 artifacts.
-METHODOLOGY = "pure-plan-v3"
+#: Post-suite settle: a run started right after a test suite inherits
+#: its box state (r6 pairs: ~15-20% on the legacy-16 subtotal), so
+#: before the JVM starts bench.py waits while the 1-minute load average
+#: is above LOAD_GATE, for at most COOLDOWN_SEC seconds — an idle box
+#: starts immediately. A run whose load is still above the
+#: gate after the settle is labelled busy_box and gets BUSY_EXTRA_REPS
+#: more reps, so the per-query MIN has enough draws to land a clean one.
+COOLDOWN_SEC = 15
+LOAD_GATE = 4.0
+BUSY_EXTRA_REPS = 4
+
+
+def loadavg() -> list:
+    """The 1/5/15-minute load averages, or [] where the OS has none."""
+    try:
+        return [round(v, 2) for v in os.getloadavg()]
+    except (AttributeError, OSError):
+        return []
+
+
+def selected(available) -> list:
+    """$BENCH_QUERIES (comma-separated) if set, else HEADLINE, restricted
+    to the keys in ``available``."""
+    extra = os.environ.get("BENCH_QUERIES")
+    return [n for n in (extra.split(",") if extra else HEADLINE) if n in available]
+
+
+def session(app_name: str, sf_dir: str):
+    """The bench session posture, shared by every script that times or
+    explains the bench queries: local[$SPARK_GRAFT_CPUS] (default 32),
+    shuffle partitions $SPARK_GRAFT_SHUFFLE (default 8), AQE off, and
+    every table of ``sf_dir`` persisted in memory."""
+    from world_cup_duckdb_spark import get_spark
+    from world_cup_duckdb_spark.sources.catalog import warm_cache
+
+    # AQE is off for this session only (the engine default keeps it on):
+    # it runs every shuffle stage as a separate job so it can re-plan
+    # between them, and with shuffle=8, statically broadcast dims and no
+    # skew there is nothing to re-plan (r4, sf0.1, min of 7: core-10
+    # total 3.42 s → 2.78 s).
+    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "8")
+    spark = get_spark(
+        app_name,
+        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        extra_conf={
+            "spark.sql.shuffle.partitions": shuffle,
+            "spark.sql.adaptive.enabled": "false",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    # The persisted, sliced tables give every query an in-memory columnar
+    # scan spread over all cores — the buffer pool DuckDB gets from its
+    # own caching (see catalog.warm_cache).
+    warm_cache(spark, sf_dir)
+    return spark
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    # Post-suite settle (VERDICT r6 item 6): the round driver benches
-    # right after its 50-query correctness pass, and the committed r6
-    # pairs show that box state costs the legacy-16 subtotal ~15-20%
-    # (2.16-2.33x vs 1.82-1.96x idle) — residual page-cache pressure,
-    # CPU-governor state, and reclaim from the just-exited session.
-    # LOAD-AWARE (ADVICE r7): the old unconditional 15 s sleep taxed
-    # every interactive/CI run that never followed a suite. Now the
-    # settle only waits while the 1-minute load average still shows a
-    # recently-busy box (> BENCH_COOLDOWN_LOAD, default 4), up to
-    # BENCH_COOLDOWN_SEC (default 15) — an idle box starts immediately,
-    # the driver's post-suite run still settles. BENCH_COOLDOWN_SEC=0
-    # disables entirely.
-    cooldown = float(os.environ.get("BENCH_COOLDOWN_SEC", "15"))
-    load_gate = float(os.environ.get("BENCH_COOLDOWN_LOAD", "4"))
-    # os.getloadavg is Unix-only (ADVICE r8); without it there is no
-    # load signal, so fall back to the fixed settle the gate replaced.
-    _load = (
-        (lambda: os.getloadavg()[0])
-        if hasattr(os, "getloadavg")
-        else (lambda: float("inf"))
-    )
-
-    def _loadavg() -> list:
-        try:
-            return [round(v, 2) for v in os.getloadavg()]
-        except (AttributeError, OSError):
-            return []
-    waited = 0.0
-    while waited < cooldown and _load() > load_gate:
+    for _ in range(COOLDOWN_SEC):
+        if (loadavg() or [float("inf")])[0] <= LOAD_GATE:
+            break
         time.sleep(1.0)
-        waited += 1.0
+    # loadavg_before is the box-state signal; loadavg_after is confounded
+    # by the bench's own burst and mainly dates the 5/15-min columns.
+    la_before = loadavg()
+    busy_box = bool(la_before) and la_before[0] > LOAD_GATE
 
-    # Box-state annotation (VERDICT r10 item 1): BENCH_r10's headline
-    # moved +37% purely from residual host load, and nothing in the
-    # artifact proved it — it took the judge a three-pair experiment to
-    # adjudicate. Record the 1/5/15-min load averages before the session
-    # starts and after the last measurement, and self-label the run
-    # busy_box when the PRE-run load is still above the cooldown gate
-    # after the settle expired (the post-run reading is confounded by
-    # the bench's own 32-thread burst — the before reading is the box
-    # signal; the after reading mainly shows whether something ELSE
-    # ramped mid-run via the 5/15-min columns). Under a busy box the
-    # per-query MIN needs more draws to land a clean one, so rep up.
-    la_before = _loadavg()
-    busy_box = bool(la_before) and la_before[0] > load_gate
-
-    from world_cup_duckdb_spark import get_spark
     from world_cup_duckdb_spark.queries import REGISTRY
 
-    # Shuffle parallelism sized to the local bench scale (tasks are ~one
-    # maxPartitionBytes chunk each); a production cluster overrides via
-    # SPARK_GRAFT_SHUFFLE or leaves AQE to coalesce a higher initial value.
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "8")
-    # AQE off FOR THE BENCH SESSION ONLY (engine default stays on —
-    # session.py/_DEFAULTS — and CLUSTER_PROFILE keeps it on, where its
-    # runtime re-planning earns its cost). AQE materializes every shuffle
-    # stage as a separate job so it can re-plan between them; with the
-    # bench's hand-sized shuffle=8, statically-broadcast dims, and no
-    # skew, there is nothing to re-plan and the barriers are pure
-    # per-query overhead. Measured same-process A/B at sf0.1 (min of 7,
-    # r4): core-10 total 3.42 s → 2.78 s, extension-6 total 3.34 s →
-    # 2.93 s. Same class of local-posture tuning as the shuffle=8 line
-    # above and shuffle-compression-off in session defaults.
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "false")
-    spark = get_spark(
-        "wcdbs-bench",
-        cpus=cpus,
-        extra_conf={
-            "spark.sql.shuffle.partitions": shuffle,
-            "spark.sql.adaptive.enabled": aqe,
-        },
-    )
-
-    # Warm-up: persist every table in memory and run one small query
-    # (JIT, codegen, filesystem metadata). The catalog's plan cache hands
-    # every query the SAME DataFrame objects, so persisting here gives all
-    # headline queries an in-memory columnar scan — the buffer pool DuckDB
-    # (whose oracle numbers BASELINE.md compares against) gets from its
-    # own caching plus the OS page cache. At the bench scale the hot set
-    # is ~tens of MB; a production cluster would persist the hot tables
-    # the same way (or rely on executor-local disk cache).
-    # The sliced persist (warm_cache) matters as much as the warmth: the
-    # single-file fixtures otherwise scan as 1-3 splits and per-row work
-    # runs on 1-3 of the local cores while DuckDB row-group-parallelizes
-    # across all 32 — see catalog.warm_cache docstring.
-    from world_cup_duckdb_spark.sources.catalog import warm_cache
-
-    warm_cache(spark, sf_dir)
+    spark = session("wcdbs-bench", sf_dir)
+    # Warm-up action: JIT, codegen, filesystem metadata.
     REGISTRY["flagship"].fn(spark, sf_dir).count()
-
-    names = [n for n in HEADLINE if n in REGISTRY]
-    extra = os.environ.get("BENCH_QUERIES")
-    if extra:
-        names = [n for n in extra.split(",") if n in REGISTRY]
 
     # 7 reps: this box shows multi-second CPU-steal spikes at random; the
     # per-query MIN needs enough draws that at least one lands clean.
-    # Under a flagged busy box, rep up (pair protocol, BASELINE.md).
     reps = int(os.environ.get("BENCH_REPS", "7"))
     if busy_box:
-        reps += int(os.environ.get("BENCH_BUSY_EXTRA_REPS", "4"))
+        reps += BUSY_EXTRA_REPS
 
-    plan_cache: dict = {}
     build_sec: dict = {}
 
     def once(name: str) -> float:
-        # Time build + execution together (stateful queries may do eager
-        # work at plan-build time; an execution-only timer would let that
-        # cost escape) — except the whitelisted pure-plan tier, which
-        # reuses the session's built DataFrame after rep 1.
+        # Build and execution are timed together: stateful queries do
+        # eager work at build time, which an execution-only timer would
+        # let escape. build_sec keeps the first build time per query.
         t0 = time.perf_counter()
-        df = plan_cache.get(name)
-        if df is None:
-            df = REGISTRY[name].fn(spark, sf_dir)
-            build_sec.setdefault(name, round(time.perf_counter() - t0, 3))
-            if name in PURE_PLAN:
-                plan_cache[name] = df
-        # Materialize fully (count() alone could skip column evaluation
-        # after AQE prunes; write.noop forces every column of every row).
+        df = REGISTRY[name].fn(spark, sf_dir)
+        build_sec.setdefault(name, round(time.perf_counter() - t0, 3))
+        # Materialize fully (count() alone could skip column evaluation;
+        # write.noop forces every column of every row).
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
@@ -240,25 +166,21 @@ def main() -> None:
         out: dict = {}
         for name in qnames:
             once(name)  # per-query warm-up: codegen compile, broadcast build
-            runs = sorted(once(name) for _ in range(reps))
-            # Min, not median: this box shows strictly ADDITIVE noise
-            # (host CPU steal / GC pauses turn an 0.8 s job into 15 s at
-            # random), so the minimum is the unbiased steady-state
-            # estimate — a median can land on a noise draw and swing
-            # round-over-round deltas.
-            out[name] = round(runs[0], 3)
+            # Min, not median: this box's noise is strictly additive
+            # (CPU steal, GC pauses), so the minimum is the steady-state
+            # estimate.
+            out[name] = round(min(once(name) for _ in range(reps)), 3)
         return out
 
-    timings = measure(names)
+    timings = measure(selected(REGISTRY))
     # Extended tier: measured the same way, reported under separate keys
     # so `value` (the headline total) stays comparable round-over-round.
-    # Skipped when BENCH_QUERIES pins an explicit set or BENCH_EXTENDED=0.
-    ext_names = (
+    # Skipped when BENCH_QUERIES pins an explicit set.
+    ext_timings = measure(
         []
-        if extra or os.environ.get("BENCH_EXTENDED", "1") == "0"
+        if os.environ.get("BENCH_QUERIES")
         else [n for n in EXTENDED if n in REGISTRY]
     )
-    ext_timings = measure(ext_names)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -272,24 +194,10 @@ def main() -> None:
     if ext_timings:
         payload["extended_queries"] = ext_timings
         payload["extended_total"] = round(sum(ext_timings.values()), 3)
-    # Self-labeling box state (VERDICT r10 item 1): loadavg_before is
-    # the signal a reader should trust; loadavg_after is confounded by
-    # the bench's own burst and mainly dates the 5/15-min columns.
-    payload["loadavg_before"] = la_before
-    payload["loadavg_after"] = _loadavg()
-    payload["busy_box"] = busy_box
-    payload["reps"] = reps
-    # Per-query Python-side plan-construction cost (one measurement,
-    # taken at the warm-up build). For the pure-plan tier this cost is
-    # paid once per session rather than once per rep; for stateful
-    # queries it is inside every rep as before. Reported so the split
-    # between driver-API chatter and engine work stays auditable.
-    payload["build_sec"] = build_sec
-    # Timing-policy self-label (ADVICE r11) + which queries actually
-    # reused a session-built plan this run, so old/new artifacts can't
-    # be compared under silently different rep semantics.
-    payload["methodology"] = METHODOLOGY
-    payload["pure_plan_reused"] = sorted(plan_cache)
+    payload.update(
+        loadavg_before=la_before, loadavg_after=loadavg(), busy_box=busy_box,
+        reps=reps, build_sec=build_sec, methodology=METHODOLOGY,
+    )
     print(json.dumps(payload))
 
 

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""DuckDB-oracle side of the 2x ratio, measured like bench.py's Spark side.
+"""DuckDB-oracle side of the Spark/DuckDB pair, measured like bench.py's
+Spark side.
 
 BASELINE.md compares `bench.py`'s headline timings against the same
 oracle SQL run in DuckDB on the same machine. Box state moves BOTH
@@ -8,9 +9,12 @@ the ratio is only meaningful when the two sides are measured
 back-to-back on the same box — this script makes the DuckDB column a
 one-command re-measurement instead of an ad-hoc snippet.
 
-Methodology mirrors bench.py: per-query MIN of $BENCH_REPS (default 7)
-after one warm-up execution, 32 threads, tables registered as views over
-the same parquet files. Prints ONE JSON line:
+Methodology mirrors bench.py: both sides plan and execute in every rep
+(here `con.execute` parses and plans the SQL string each time), the
+per-query MIN of $BENCH_REPS (default 7) after one warm-up execution,
+$SPARK_GRAFT_CPUS threads (default 32), tables registered as views over
+the same parquet files, and the same query selection and box-state
+fields. Prints ONE JSON line:
     {"metric": "oracle_queries_total_wall", "value": s, "unit": "sec",
      "queries": {name: s}, "sf": ...}
 
@@ -30,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
-from bench import HEADLINE  # noqa: E402
+from bench import LOAD_GATE, loadavg, selected  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -38,23 +42,12 @@ TABLES = (
 ).split()
 
 
-def _loadavg() -> list:
-    try:
-        return [round(v, 2) for v in os.getloadavg()]
-    except (AttributeError, OSError):
-        return []
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     threads = os.environ.get("SPARK_GRAFT_CPUS", "32")
     reps = int(os.environ.get("BENCH_REPS", "7"))
-    # Box-state annotation (VERDICT r10 item 1): same fields as
-    # bench.py so a pair of artifacts self-documents whether it was
-    # measured on a settled box. The gate mirrors BENCH_COOLDOWN_LOAD.
-    load_gate = float(os.environ.get("BENCH_COOLDOWN_LOAD", "4"))
-    la_before = _loadavg()
-    busy_box = bool(la_before) and la_before[0] > load_gate
+    la_before = loadavg()
+    busy_box = bool(la_before) and la_before[0] > LOAD_GATE
 
     import __spark_entry__ as entry
 
@@ -69,18 +62,13 @@ def main() -> None:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
             )
 
-    names = [n for n in HEADLINE if n in oracles]
-    extra = os.environ.get("BENCH_QUERIES")
-    if extra:
-        names = [n for n in extra.split(",") if n in oracles]
-
     def once(name: str) -> float:
         t0 = time.perf_counter()
         con.execute(oracles[name]).fetchall()
         return time.perf_counter() - t0
 
     timings: dict[str, float] = {}
-    for name in names:
+    for name in selected(oracles):
         once(name)  # warm-up: page cache, plan cache
         timings[name] = round(min(once(name) for _ in range(reps)), 3)
 
@@ -95,7 +83,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf_dir,
                 "loadavg_before": la_before,
-                "loadavg_after": _loadavg(),
+                "loadavg_after": loadavg(),
                 "busy_box": busy_box,
                 "reps": reps,
             }

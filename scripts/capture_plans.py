@@ -6,9 +6,9 @@ optimization rounds (guide §1: record the plan shape before/after).
 Usage:
     python scripts/capture_plans.py --tag r12 --suffix before [key ...]
 
-Defaults to the bench HEADLINE + EXTENDED sets at sf0.1 under the exact
-bench session posture (cpus=$SPARK_GRAFT_CPUS, shuffle=8, AQE off,
-warm cache) so the captured plan is the plan the bench times.
+Defaults to the bench HEADLINE + EXTENDED sets at sf0.1 on the bench's
+own session (bench.session) so the captured plan is the plan the bench
+times.
 """
 
 from __future__ import annotations
@@ -33,24 +33,8 @@ def main() -> None:
         REGISTRY,
         release_tracked_persists,
     )
-    from world_cup_duckdb_spark.session import get_spark
-    from world_cup_duckdb_spark.sources.catalog import warm_cache
 
-    spark = get_spark(
-        "wcdbs-plan-capture",
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        extra_conf={
-            "spark.sql.shuffle.partitions": os.environ.get(
-                "SPARK_GRAFT_SHUFFLE", "8"
-            ),
-            "spark.sql.adaptive.enabled": os.environ.get(
-                "SPARK_GRAFT_AQE", "false"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    warm_cache(spark, args.sf_dir)
-
+    spark = bench.session("wcdbs-plan-capture", args.sf_dir)
     keys = args.keys or (bench.HEADLINE + bench.EXTENDED)
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-stage wall breakdown of the heaviest bench queries (guide §1:
-measure first, isolate with the noop sink). Reproduces the bench
-session posture exactly (warm cache, shuffle=8, AQE off), then times
+measure first, isolate with the noop sink). Runs on the bench session
+(bench.session: warm cache, shuffle=8, AQE off), then times
 labeled sub-plans of a query with the noop sink so the expensive piece
 is identified before anything is changed.
 
@@ -23,27 +23,6 @@ def noop(df) -> float:
     t0 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
-
-
-def get_session():
-    from world_cup_duckdb_spark.session import get_spark
-    from world_cup_duckdb_spark.sources.catalog import warm_cache
-
-    spark = get_spark(
-        "wcdbs-profile",
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        extra_conf={
-            "spark.sql.shuffle.partitions": os.environ.get(
-                "SPARK_GRAFT_SHUFFLE", "8"
-            ),
-            "spark.sql.adaptive.enabled": os.environ.get(
-                "SPARK_GRAFT_AQE", "false"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    warm_cache(spark, SF_DIR)
-    return spark
 
 
 def profile_corpus_prep(spark, reps: int = 3) -> None:
@@ -176,7 +155,9 @@ def profile_job_floor(spark, reps: int = 11) -> None:
 
 
 def main() -> None:
-    spark = get_session()
+    import bench
+
+    spark = bench.session("wcdbs-profile", SF_DIR)
     which = sys.argv[1] if len(sys.argv) > 1 else "all"
     if which in ("corpus_prep", "all"):
         profile_corpus_prep(spark)

@@ -66,39 +66,11 @@ def test_bench_emits_one_json_line():
     # Plan-construction cost is reported per query (one warm-up build).
     assert set(rec["build_sec"]) == {"flagship", "op47_topk"}
     assert all(v >= 0 for v in rec["build_sec"].values())
+    # One rep policy: every rep rebuilds its plan, and the payload has
+    # no field naming plan-reused queries (pinned by the exact key set).
+    assert rec["methodology"] == "rebuild-v4"
+    assert set(rec) == {
+        "metric", "value", "unit", "queries", "sf", "loadavg_before",
+        "loadavg_after", "busy_box", "reps", "build_sec", "methodology",
+    }
 
-
-def test_pure_plan_whitelist_is_actually_pure(spark, sf_dir):
-    """bench.py's PURE_PLAN members get their built DataFrame reused
-    across bench reps, which is only honest if building one does ZERO
-    engine work: no Spark job at build time (eager staging, counts,
-    checkpoints) and no tracked persist registered (whose warm
-    InMemoryRelation across reps is exactly what the r7
-    every-rep-cold decision forbids measuring). This walk fails the
-    whitelist the moment a member's build stops being pure."""
-    sys.path.insert(0, REPO)
-    from bench import PURE_PLAN
-
-    import world_cup_duckdb_spark.queries as Q
-    from world_cup_duckdb_spark import tracking
-
-    tracker = spark.sparkContext._jsc.sc().statusTracker()
-    # Prime the catalog exactly as bench.py does before measuring
-    # (warm_cache + a first build): the FIRST table touch of a session
-    # runs one-time catalog jobs (file listing, the events nanos
-    # conversion probe) that are session setup, not per-query work —
-    # bench reps never see them because warm-up precedes measurement.
-    for name in sorted(PURE_PLAN):
-        assert name in Q.REGISTRY, name
-        Q.REGISTRY[name].fn(spark, sf_dir)
-    offenders = []
-    for name in sorted(PURE_PLAN):
-        Q.release_tracked_persists()
-        before = len(list(tracker.getJobIdsForGroup(None)))
-        Q.REGISTRY[name].fn(spark, sf_dir)
-        jobs = len(list(tracker.getJobIdsForGroup(None))) - before
-        persists = len(tracking._local.releasers)
-        if jobs or persists:
-            offenders.append((name, f"jobs={jobs}", f"persists={persists}"))
-    Q.release_tracked_persists()
-    assert offenders == [], offenders

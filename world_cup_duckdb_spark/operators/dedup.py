@@ -31,7 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from world_cup_duckdb_spark.operators.text import char_shingles, tokens, word_shingles
+from world_cup_duckdb_spark.operators.text import (
+    char_shingles, tokens, tokens_sql, word_shingles,
+)
 
 
 # Re-exported from operators.scale (the shuffle-management toolkit);
@@ -62,7 +64,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     shingle_words: int = 3,
-    spread: bool = True,
 ) -> DataFrame:
     """Per-document MinHash signatures: (id, sig0..sig{n-1}).
 
@@ -95,22 +96,12 @@ def minhash_signatures(
     #    cost ~1,200 round trips ≈ 0.45 s of driver-side chatter per
     #    plan build — paid EVERY run by the stateful dedup queries that
     #    rebuild around their band persist.
-    # ``spread=False`` for STREAMING inputs: spread_for_cpu_work sizes
-    # its repartition decision from df.inputFiles(), which a streaming
-    # relation cannot answer — micro-batches already arrive partitioned
-    # by the source, so the fan-out is both unavailable and unneeded.
-    # The inline `split(text, ' ')` below is the SQL spelling of the
-    # operators.text.tokens() contract (single-space split — the one
-    # tokenization every oracle mirrors); if tokens() ever changes, this
-    # fragment must change with it (tests/test_parity.py's dedup-family
-    # hash checks catch a divergence).
     n_seeds = (num_hashes + 3) // 4
     k = shingle_words
-    qid, qtext = f"`{id_col}`", f"`{text_col}`"
-    narrow = docs.select(F.col(id_col), F.col(text_col))
-    staged = (
-        spread_for_cpu_work(narrow, id_col) if spread else narrow
-    ).selectExpr(qid, f"split({qtext}, ' ') AS _t")
+    qid = f"`{id_col}`"
+    staged = spread_for_cpu_work(
+        docs.select(F.col(id_col), F.col(text_col)), id_col
+    ).selectExpr(qid, f"{tokens_sql(text_col)} AS _t")
     sh = staged.selectExpr(
         qid,
         f"array_distinct(CASE WHEN size(_t) >= {k} THEN "
@@ -143,7 +134,6 @@ def minhash_bands(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_words: int = 3,
-    spread: bool = True,
 ) -> DataFrame:
     """Per-document LSH band keys: (id, band, band_key).
 
@@ -158,7 +148,6 @@ def minhash_bands(
         id_col,
         num_hashes=num_hashes,
         shingle_words=shingle_words,
-        spread=spread,
     )
     return bands_from_signatures(sigs, id_col, num_hashes, band_size)
 

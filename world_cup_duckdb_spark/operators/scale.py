@@ -262,9 +262,12 @@ def spread_for_cpu_work(df: DataFrame, key_col: str) -> DataFrame:
     and this is a no-op — no shuffle is ever added to the 100 TB path,
     and unknown/remote inputs are left untouched (conservative). The
     estimate is memoized per (session, analyzed plan) — see
-    ``_SPREAD_MEMO``."""
+    ``_SPREAD_MEMO``. A streaming input comes back unchanged: its
+    micro-batches arrive partitioned by the source."""
     import os
 
+    if df.isStreaming:
+        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:

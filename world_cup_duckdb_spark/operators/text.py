@@ -32,10 +32,15 @@ STOPWORDS = {
 _LANG_ORDER = ("en", "es", "de", "fr")
 
 
-def tokens(text: Column | str) -> Column:
+def tokens_sql(col: str) -> str:
+    """Whitespace tokenization of column ``col`` as a SQL fragment: a
+    single-space split, the one tokenization every oracle mirrors."""
+    return f"split(`{col}`, ' ')"
+
+
+def tokens(col: str) -> Column:
     """Whitespace tokenization as an array column."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.split(text, " ")
+    return F.expr(tokens_sql(col))
 
 
 def stopword_count(toks: Column, lang: str) -> Column:
@@ -75,14 +80,13 @@ def stage_token_counts(df, keep, langs=_LANG_ORDER, text_col="text", keep_text=F
     """
     # SQL-string projections (r13): one py4j round trip per stage instead
     # of a Column/lambda builder call per node — the minhash_signatures
-    # r12 rationale; this helper sits inside the stateful corpus-prep
-    # build (paid per run) and a dozen pure-plan builds. Faithful
-    # transcription of tokens()/stopword_count(): split on a single
-    # space, size(filter(toks, t IN stopwords)). Identifiers are
-    # backtick-quoted (ADVICE r12).
+    # r12 rationale; this helper sits inside a dozen bench query builds,
+    # paid in every rep. The counters transcribe stopword_count():
+    # size(filter(toks, t IN stopwords)). Identifiers are backtick-quoted
+    # (ADVICE r12).
     cols = [*keep, text_col] if keep_text else list(keep)
     quoted = [f"`{c}`" for c in cols]
-    staged = df.selectExpr(*quoted, f"split(`{text_col}`, ' ') AS __toks")
+    staged = df.selectExpr(*quoted, f"{tokens_sql(text_col)} AS __toks")
     return staged.selectExpr(
         *quoted,
         "size(__toks) AS n_tokens",

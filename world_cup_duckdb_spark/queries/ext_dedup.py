@@ -173,8 +173,7 @@ def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1 ReusedExchange, same exchange count, identical rows; interleaved
     # min-of-8 at sf0.1 is a wash locally (0.51 vs 0.53 build+exec) —
     # the cut is memory/lifecycle, not wall-clock, at bench scale. With
-    # no tracked persist the build is a pure lazy plan (bench.py
-    # PURE_PLAN, machine-checked by tests/test_harness.py).
+    # no tracked persist the build is a pure lazy plan.
     bands = minhash_bands(with_recrawl(d), num_hashes=8, band_size=2)
     return lsh_candidate_pairs(bands, max_bucket_size=64)
 

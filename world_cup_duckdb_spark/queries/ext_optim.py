@@ -128,7 +128,7 @@ def ext_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap broadcast, exact-key broadcast, final) plus a tracked persist
     to stop the key subplan re-deriving per consumer — with one consumer
     the persist and its lifecycle bookkeeping vanish, which also makes
-    the build a pure lazy plan (bench PURE_PLAN tier). Probes are O(1)
+    the build a pure lazy plan. Probes are O(1)
     dense-array bit tests, not map scans and not joins — see
     bloom_semijoin_state's docstring for the measured MapType-lookup
     trap. No distinct on the key set either: s_suppkey is the supplier

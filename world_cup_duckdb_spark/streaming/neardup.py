@@ -121,9 +121,7 @@ def streaming_neardup_band_matches(
     """Per (document, band) match rows against the standing bucket
     index: (doc_id, band, matched_doc) with matched_doc = the bucket's
     prior hub, NULL when the document opens the bucket."""
-    bands = minhash_bands(
-        docs, num_hashes=num_hashes, band_size=band_size, spread=False
-    )
+    bands = minhash_bands(docs, num_hashes=num_hashes, band_size=band_size)
     return bands.groupBy("band", "band_key").applyInPandasWithState(
         _update_bucket,
         outputStructType=MATCH_SCHEMA,
