@@ -4,10 +4,13 @@ a long-lived driver session evaluates hundreds of queries back to back,
 and a leaked InMemoryRelation per query churns executor storage memory.
 The contract: entering any registered query releases every persist the
 same thread's previous query tracked (tracking.py keeps one release list
-per thread)."""
+per thread). The session-lived table cache (sources/catalog.py:warm_cache)
+is pinned here too: its job shape, its job group, and its re-warm after a
+caller drops the catalog entries."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import DataFrame
 
 from world_cup_duckdb_spark import tracking
@@ -15,6 +18,7 @@ from world_cup_duckdb_spark.queries import (
     REGISTRY,
     release_tracked_persists,
 )
+from world_cup_duckdb_spark.sources import catalog
 
 
 def _tracked_frames() -> list[DataFrame]:
@@ -161,3 +165,92 @@ def test_ranged_private_release_handle_resolves(spark):
     )
     tracking.release_all()
     assert len(sc.getRDDStorageInfo()) <= base, "release hook did not free"
+
+
+#: Spark jobs one cold warm_cache runs at sf0.001 (AQE on): one parquet
+#: schema-inference job per table, one noop write per unsliced table, and
+#: the shuffle-map job plus final write job of each of the two sliced
+#: corpora. The serial per-table `count()` it replaced ran 42.
+WARM_CACHE_MAX_JOBS = 24
+
+
+@pytest.fixture
+def cold_catalog(spark, sf_dir):
+    """Drop this session's catalog entries before and after the test, so
+    warm_cache starts cold and later tests see unsliced, unpersisted
+    plans."""
+
+    def drop():
+        for name in catalog.TABLES:
+            key = (spark.sparkContext.applicationId, sf_dir, name)
+            df = catalog._PLAN_CACHE.pop(key, None)
+            if df is not None:
+                df.unpersist()
+
+    drop()
+    yield
+    drop()
+
+
+@pytest.mark.usefixtures("cold_catalog")
+def test_warm_cache_swaps_sliced_plans_into_catalog(spark, sf_dir):
+    """warm_cache must (a) hand back the same DataFrame objects that
+    subsequent table() calls return (the catalog plan cache is swapped,
+    so every registered query picks up the sliced, persisted plan),
+    (b) slice CPU-heavy corpora to the session's parallelism, (c) leave
+    broadcast dims unsliced, and (d) preserve schemas exactly."""
+    before = {n: catalog.table(spark, sf_dir, n).schema for n in catalog.TABLES}
+    warmed = catalog.warm_cache(spark, sf_dir)
+    target = spark.sparkContext.defaultParallelism
+    for name, df in warmed.items():
+        assert catalog.table(spark, sf_dir, name) is df
+        assert df.schema == before[name]
+        assert df.storageLevel.useMemory
+    assert warmed["documents"].rdd.getNumPartitions() == target
+    assert warmed["region"].rdd.getNumPartitions() == 1
+
+
+@pytest.mark.usefixtures("cold_catalog")
+def test_warm_cache_rewarms_after_catalog_entries_are_dropped(spark, sf_dir):
+    """The plan cache is warm_cache's only record of what it warmed: after
+    a caller unpersists and pops the entries, the next call warms fresh
+    plans instead of looking up the popped keys."""
+    app = spark.sparkContext.applicationId
+    for name, df in catalog.warm_cache(spark, sf_dir).items():
+        df.unpersist()
+        catalog._PLAN_CACHE.pop((app, sf_dir, name))
+    rewarmed = catalog.warm_cache(spark, sf_dir)
+    for name, df in rewarmed.items():
+        assert df.is_cached and df.storageLevel.useMemory
+        assert catalog.table(spark, sf_dir, name) is df
+
+
+@pytest.mark.usefixtures("cold_catalog")
+def test_warm_cache_job_shape(spark, sf_dir):
+    """Job-count pin for a cold warm_cache, plus the job group contract of
+    its thread pool: every job started between two marker jobs belongs
+    to the caller's group (no pool thread escapes it), and a second call
+    runs no job and returns the same objects."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([0], 1).count()
+        return max(tracker.getJobIdsForGroup(group))
+
+    first, second = "warm-cache-first", "warm-cache-second"
+    try:
+        start = marker("warm-cache-start")
+        sc.setJobGroup(first, first)
+        warmed = catalog.warm_cache(spark, sf_dir)
+        end = marker("warm-cache-end")
+        sc.setJobGroup(second, second)
+        again = catalog.warm_cache(spark, sf_dir)
+    finally:
+        sc.setJobGroup("warm-cache-other", "warm-cache-other")
+    jobs = set(tracker.getJobIdsForGroup(first))
+    assert len(jobs) <= WARM_CACHE_MAX_JOBS, sorted(jobs)
+    assert jobs == set(range(start + 1, end)), sorted(jobs)
+    assert not tracker.getJobIdsForGroup(second)
+    assert all(again[name] is df for name, df in warmed.items())

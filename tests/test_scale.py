@@ -419,32 +419,6 @@ def test_priority_sample_size_and_estimator_floor(spark, sf_dir):
         assert r.w_hat >= r.n_chars
 
 
-def test_warm_cache_swaps_sliced_plans_into_catalog(spark, sf_dir):
-    """warm_cache must (a) hand back the same DataFrame objects that
-    subsequent table() calls return (the catalog plan cache is swapped,
-    so every registered query picks up the sliced, persisted plan),
-    (b) slice CPU-heavy corpora to the session's parallelism, (c) leave
-    broadcast dims unsliced, and (d) preserve schemas exactly."""
-    from world_cup_duckdb_spark.sources import catalog
-
-    before = {n: catalog.table(spark, sf_dir, n).schema for n in catalog.TABLES}
-    warmed = catalog.warm_cache(spark, sf_dir)
-    try:
-        target = spark.sparkContext.defaultParallelism
-        for name, df in warmed.items():
-            assert catalog.table(spark, sf_dir, name) is df
-            assert df.schema == before[name]
-            assert df.storageLevel.useMemory
-        assert warmed["documents"].rdd.getNumPartitions() == target
-        assert warmed["region"].rdd.getNumPartitions() == 1
-    finally:
-        for name, df in warmed.items():
-            df.unpersist()
-            catalog._PLAN_CACHE.pop(
-                (spark.sparkContext.applicationId, sf_dir, name), None
-            )
-
-
 def test_spread_fires_on_persisted_single_partition_input(spark):
     """A persisted DataFrame reports no inputFiles; spread_for_cpu_work
     must fall back to the cached partition count instead of silently
