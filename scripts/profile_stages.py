@@ -3,7 +3,9 @@
 measure first, isolate with the noop sink). Runs on the bench session
 (bench.session: warm cache, shuffle=8, AQE off), then times
 labeled sub-plans of a query with the noop sink so the expensive piece
-is identified before anything is changed.
+is identified before anything is changed. ``jobs`` prints the empty-job
+floors, then each bench query's job count and codegen compiles
+(``profile.codegen_stats``) for its first rep.
 
 Usage: python scripts/profile_stages.py [corpus_prep|dedup_minhash|jobs]
 """
@@ -154,6 +156,23 @@ def profile_job_floor(spark, reps: int = 11) -> None:
         print(f"  {label:32s} {runs[0]:7.3f}s")
 
 
+def profile_query_jobs(spark) -> None:
+    """Jobs and codegen compiles of one rep of each bench query."""
+    import bench
+    from world_cup_duckdb_spark.profile import codegen_stats
+    from world_cup_duckdb_spark.queries import REGISTRY
+
+    sc = spark.sparkContext
+    for name in bench.selected(REGISTRY):
+        sc.setJobGroup(name, name)
+        before = codegen_stats(spark)
+        noop(REGISTRY[name].fn(spark, SF_DIR))
+        after = codegen_stats(spark)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(name) or [])
+        print(f"  {name:32s} {jobs:3d} jobs {after.compiles - before.compiles:5d}"
+              f" compiles {after.compile_ms - before.compile_ms:8.1f} ms")
+
+
 def main() -> None:
     import bench
 
@@ -166,6 +185,8 @@ def main() -> None:
     if which in ("jobs", "all"):
         print("== job/stage floors ==")
         profile_job_floor(spark)
+        print("== jobs and codegen per query (first rep) ==")
+        profile_query_jobs(spark)
 
 
 if __name__ == "__main__":

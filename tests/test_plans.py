@@ -820,6 +820,34 @@ def test_no_unpartitioned_window_over_data(spark, sf_dir, name, max_single):
     assert "Scan ExistingRDD" in p, p
 
 
+#: Ceiling on the classes the ten interactive reference queries compile
+#: on a cold pass (measured 140 at sf0.001, 4 and 8 cores). The session's
+#: codegen cache must hold this working set (tests/test_session.py).
+INTERACTIVE_CODEGEN_CLASSES = 170
+
+
+def test_interactive_mix_stops_recompiling(spark, sf_dir):
+    """bench.py's ten reference queries run round-robin, as an
+    interactive mix does. Once pass 1 has generated their classes, the
+    codegen cache must keep them: passes 2 and 3 together may compile at
+    most 10% of pass 1 (AQE can still pick an unseen final-plan variant,
+    so 0 would be flaky). With Spark's default cache of 100 entries every
+    later pass recompiled 129-132 of pass 1's 140 classes."""
+    from bench import HEADLINE
+
+    from world_cup_duckdb_spark.profile import codegen_stats
+
+    compiled = []
+    for _ in range(3):
+        before = codegen_stats(spark).compiles
+        for name in HEADLINE[:10]:
+            REGISTRY[name].fn(spark, sf_dir).toPandas()
+        compiled.append(codegen_stats(spark).compiles - before)
+    first, steady = compiled[0], compiled[1] + compiled[2]
+    assert first <= INTERACTIVE_CODEGEN_CLASSES, compiled
+    assert steady <= 0.1 * first, compiled
+
+
 def test_job_floor_pins_flagship_and_bloom(spark, sf_dir):
     """Job-count pins for the two multi-job bench queries the r7 bench
     decomposition flagged (BASELINE.md legacy-16 floor section).

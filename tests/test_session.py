@@ -7,7 +7,10 @@ profiles are asserted through ``build_conf`` — the exact dict
 
 from __future__ import annotations
 
+from tests.test_plans import INTERACTIVE_CODEGEN_CLASSES
 from world_cup_duckdb_spark.session import CLUSTER_PROFILE, build_conf
+
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 
 
 def test_local_profile_disables_shuffle_compression():
@@ -19,6 +22,9 @@ def test_local_profile_disables_shuffle_compression():
     assert conf["spark.sql.session.timeZone"] == "UTC"
     assert conf["spark.sql.adaptive.enabled"] == "true"
     assert conf["spark.sql.legacy.parquet.nanosAsLong"] == "true"
+    # The generated-class cache holds the interactive working set.
+    assert conf[CODEGEN_CACHE] == "1000"
+    assert int(conf[CODEGEN_CACHE]) >= INTERACTIVE_CODEGEN_CLASSES
 
 
 def test_cluster_profile_restores_compression_and_parallelism():
@@ -29,6 +35,9 @@ def test_cluster_profile_restores_compression_and_parallelism():
     # Parallelism tracks cluster cores, not one machine.
     assert int(conf["spark.sql.shuffle.partitions"]) >= 1000
     assert conf["spark.sql.files.maxPartitionBytes"] == "256m"
+    # A cluster driver serves the same interactive mix.
+    assert conf[CODEGEN_CACHE] == "1000"
+    assert int(conf[CODEGEN_CACHE]) >= INTERACTIVE_CODEGEN_CLASSES
     # The profile overrides posture, never correctness invariants.
     assert conf["spark.sql.session.timeZone"] == "UTC"
     assert conf["spark.sql.adaptive.enabled"] == "true"
