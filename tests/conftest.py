@@ -6,21 +6,23 @@ import pytest
 
 SF_SMOKE = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
-#: Suite tiers (VERDICT r10 item 6). Per-file walls measured 2026-08-16
-#: on this box (local[8] test session, serial):
+#: Suite tiers (VERDICT r10 item 6). Per-file walls, summed from
+#: ``--durations=0`` on 2026-10-19 (shared 4-core VM, local[4] test
+#: session, serial; the whole suite took 34:47):
 #:   slow tier — the DuckDB-oracle parity sweep over every exported
-#:     key (test_parity, ~12 min) and the adversarial replication
-#:     harness (test_scale).
+#:     key (test_parity, 553 s, 138 s of it wc_build_manifest) and the
+#:     adversarial replication harness (test_scale, 22 s).
 #:   integration tier — multi-minute end-to-end lifecycles:
-#:     worldcup DAG 334 s, streaming 138 s, llm_ops 136 s,
-#:     similarity 112 s, properties 115 s, determinism 76 s,
-#:     dedup_index 70 s, harness 62 s, lakehouse 61 s.
-#:   fast tier (everything else) — ~8 min: test_plans (every registry
-#:     key's plan pins via one shared cold walk, ~250-300 s),
-#:     test_operators 148 s, test_multimodal 19 s,
-#:     test_cache_lifecycle 32 s, test_session 2 s.
+#:     worldcup DAG 365 s (298 s of it the replicated-build validator),
+#:     streaming 177 s, dedup_index 116 s, properties 110 s,
+#:     llm_ops 102 s, similarity 62 s, determinism 56 s, lakehouse 35 s,
+#:     harness 23 s.
+#:   fast tier (everything else) — ~8 min: test_plans 332 s (every
+#:     registry key's plan pins via one shared cold walk, 294 s of
+#:     fixture setup), test_operators 83 s, test_cache_lifecycle 43 s,
+#:     test_multimodal 3 s, test_session and test_units under 1 s.
 #: Per-commit gate:  python -m pytest tests/ -m "not slow and not integration" -x -q
-#: Pre-push gate:    python -m pytest tests/ -m "not slow" -x -q   (~20 min)
+#: Pre-push gate:    python -m pytest tests/ -m "not slow" -x -q   (~25 min)
 #: Round gate (driver/judge): no -m filter — nothing is deselected by
 #: default; marking is purely additive.
 _SLOW_FILES = {"test_parity.py", "test_scale.py"}

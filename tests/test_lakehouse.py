@@ -902,3 +902,126 @@ def test_lakehouse_rejects_uri_schemed_paths(spark):
             lh.latest_version(bad)
     # bare local paths pass (absent table reads as None, not an error)
     assert lh.latest_version("/tmp/definitely-absent-lakehouse-xyz") is None
+
+
+def test_zone_map_describes_the_landed_rows(spark, tmp_path):
+    """The zone map observed by the write job equals an independent
+    min/max over the landed directory, for every tracked type: int,
+    double, date, timestamp, string, an all-NULL column, and a
+    nondeterministic rand() column (re-evaluating its plan would give
+    other values). An empty frame still commits a readable directory
+    with NULL bounds."""
+    import os
+
+    from world_cup_duckdb_spark.operators.lakehouse import _read_manifest
+
+    cols = ["i", "d", "dt", "ts", "s", "nul", "r"]
+    df = spark.range(0, 200, 1, 4).select(
+        (F.col("id") * 7 % 101).cast("int").alias("i"),
+        (F.col("id") / 3).alias("d"),
+        F.expr("date_add(date'2024-01-01', cast(id as int))").alias("dt"),
+        F.expr(
+            "timestamp'2024-01-01 10:00:00' + make_interval(0, 0, 0, 0, 0, "
+            "cast(id as int), 0)"
+        ).alias("ts"),
+        F.concat(F.lit("s"), F.col("id")).alias("s"),
+        F.lit(None).cast("int").alias("nul"),
+        F.rand().alias("r"),
+    )
+    path = str(tmp_path / "t")
+    v = write_table(df, path, stats_cols=cols)
+    (d,) = _read_manifest(path, v)["dirs"]
+    zone = _read_manifest(path, v)["stats"][d]
+    landed = spark.read.parquet(os.path.join(path, d))
+    row = landed.agg(
+        *[f(c).alias(f"{f.__name__}_{c}") for c in cols for f in (F.min, F.max)]
+    ).collect()[0]
+
+    def enc(v):  # the manifest's JSON encoding of one zone bound
+        return v if v is None or isinstance(v, (int, float, str, bool)) else str(v)
+
+    want = {c: [enc(row[f"min_{c}"]), enc(row[f"max_{c}"])] for c in cols}
+    assert zone == want
+    assert zone["dt"] == ["2024-01-01", "2024-07-18"]
+    assert isinstance(zone["ts"][0], str)
+    assert zone["nul"] == [None, None]
+
+    v2 = write_table(df.limit(0), path, mode="overwrite", stats_cols=["i"])
+    (d2,) = _read_manifest(path, v2)["dirs"]
+    assert _read_manifest(path, v2)["stats"][d2] == {"i": [None, None]}
+    assert read_table(spark, path).count() == 0
+    assert read_table(spark, path).columns == cols
+
+
+def test_merge_and_optimize_keep_zone_maps(spark, nation, tmp_path):
+    """merge_table and optimize_table rewrite the whole snapshot; the new
+    directory is profiled on the columns the old snapshot tracked, so a
+    range outside every key still prunes to no directory."""
+    from world_cup_duckdb_spark.operators.lakehouse import (
+        _read_manifest,
+        merge_table,
+        optimize_table,
+        prune_dirs,
+    )
+
+    path = str(tmp_path / "t")
+    for rk in range(5):
+        write_table(
+            nation.filter(F.col("n_regionkey") == rk),
+            path,
+            stats_cols=["n_nationkey"],
+        )
+    source = nation.filter(F.col("n_regionkey") == 1).withColumn(
+        "n_name", F.lower("n_name")
+    )
+    v = merge_table(spark, path, source, ["n_nationkey"])
+    (d,) = _read_manifest(path, v)["dirs"]
+    assert _read_manifest(path, v)["stats"][d] == {"n_nationkey": [0, 24]}
+    assert prune_dirs(path, "n_nationkey", 100, 200)[0] == []
+    v2 = optimize_table(spark, path)
+    (d2,) = _read_manifest(path, v2)["dirs"]
+    assert _read_manifest(path, v2)["stats"][d2] == {"n_nationkey": [0, 24]}
+    assert prune_dirs(path, "n_nationkey", 100, 200)[0] == []
+    assert prune_dirs(path, "n_nationkey", 3, 4)[0] == [d2]
+
+
+def test_lakehouse_writer_job_counts(spark, nation, tmp_path):
+    """Job-count pins for the lakehouse writers (statusTracker count per
+    job group, as in tests/test_plans.py). The zone map and row count
+    ride the write job, and the delete/update scope read reuses the
+    snapshot schema: write_table with stats_cols runs 1 job, delete_where
+    at most 4, update_where at most 6, merge_table at most 4 and
+    optimize_table at most 3."""
+    from world_cup_duckdb_spark.operators.lakehouse import (
+        delete_where,
+        merge_table,
+        optimize_table,
+        update_where,
+    )
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "t")
+    parts = [nation.filter(F.col("n_regionkey") == rk) for rk in range(4)]
+    source = parts[1].withColumn("n_name", F.lower("n_name"))
+    jobs = {}
+
+    def run(name, fn, *args, **kwargs):
+        group = f"lakehouse-jobpin-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(*args, **kwargs)
+        finally:
+            sc.setJobGroup("lakehouse-jobpin-other", "lakehouse-jobpin-other")
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+    for rk, part in enumerate(parts):
+        run(f"write{rk}", write_table, part, path, stats_cols=["n_nationkey"])
+    run("delete", delete_where, spark, path, "n_nationkey = 3")
+    run("update", update_where, spark, path, "n_nationkey = 5", {"n_name": "'x'"})
+    run("merge", merge_table, spark, path, source, ["n_nationkey"])
+    run("optimize", optimize_table, spark, path)
+    assert all(jobs[f"write{rk}"] == 1 for rk in range(4)), jobs
+    assert jobs["delete"] <= 4, jobs
+    assert jobs["update"] <= 6, jobs
+    assert jobs["merge"] <= 4, jobs
+    assert jobs["optimize"] <= 3, jobs

@@ -66,6 +66,7 @@ from world_cup_duckdb_spark.operators.similarity import (
     _has_remote_scheme,
     _local_fs_path,
     _require_local_path,
+    _tombstones,
 )
 
 #: Sentinel used instead of NULL inside the per-bucket min reduction so
@@ -196,25 +197,6 @@ def minhash_index_delete(
         .write.mode("append")
         .parquet(os.path.join(path, "tombstones"))
     )
-
-
-def _tombstones(spark, path: str):
-    """Tombstone relation if any deletes are pending, else None — the
-    existence probe goes through the Hadoop FileSystem API so it is
-    correct for any path Spark can read (same contract as the IVF
-    twin, operators/similarity.py:_ivf_tombstones)."""
-    t = path.rstrip("/") + "/tombstones"
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(t)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
-    if not any(
-        st.getPath().getName().endswith(".parquet")
-        for st in fs.listStatus(hpath)
-    ):
-        return None
-    return spark.read.parquet(t)
 
 
 def _compact_recover(path: str) -> None:

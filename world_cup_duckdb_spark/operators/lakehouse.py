@@ -20,6 +20,10 @@ semantics without external table-format packages:
   pruning is an explicit, separate act, so time travel stays correct
   until the operator chooses retention.
 
+Every writer commits through `_commit_write`: new rows land in one
+directory whose row count and zone map the write job itself observes;
+untouched directories carry over by reference with their zone maps.
+
 At 100 TB the same design holds: manifests stay KB-sized (they list
 directories, not rows), commits stay O(1), and data files are only ever
 added or garbage-collected, never rewritten in place.
@@ -29,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 
@@ -47,8 +52,6 @@ def _require_local(path: str) -> None:
     HDFS; object stores need a log-store as Delta does) — until then,
     local paths only, including no ``file:`` prefix (os.path would
     treat it as a literal directory name)."""
-    import re
-
     if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", path):
         raise ValueError(
             f"lakehouse tables require a bare local filesystem path, got "
@@ -185,8 +188,6 @@ def recover_torn_commits(path: str) -> dict:
     bodies (a losing retry's data), so operators know what ``vacuum``
     will not see and can remove.
     """
-    import re as _re
-
     log = _log_dir(path)
     out: dict = {
         "rolled_forward": [],
@@ -210,7 +211,7 @@ def recover_torn_commits(path: str) -> dict:
         # commit residue; a stray foreign file (operator copy, editor
         # artifact) must not abort the one path that restores a broken
         # table. latest_version() applies the same discipline.
-        m = _re.fullmatch(r"v(\d+)\.json\.claim", entry)
+        m = re.fullmatch(r"v(\d+)\.json\.claim", entry)
         if not m:
             continue
         manifest = entry[: -len(".claim")]
@@ -288,7 +289,7 @@ def recover_torn_commits(path: str) -> dict:
         # dirs too), and only directories actually on disk need vacuuming.
         live: set[str] = set()
         for entry in os.listdir(log):
-            if _re.fullmatch(r"v\d+\.json", entry):
+            if re.fullmatch(r"v\d+\.json", entry):
                 body = _body_of(entry)
                 if body is not None and isinstance(body.get("dirs"), list):
                     live.update(body["dirs"])
@@ -300,22 +301,82 @@ def recover_torn_commits(path: str) -> dict:
     return out
 
 
-def _column_stats(df: DataFrame, cols: list[str]) -> dict:
-    """Per-column [min, max] zone map for one data directory, JSON-encoded
-    (dates/timestamps stringify via isoformat). One tiny all-reduce over
-    data that is being written anyway — the write cost dwarfs it."""
+def _write_dir(
+    df: DataFrame, path: str, version: int, stats_cols: list[str]
+) -> tuple[str, int, dict | None]:
+    """Land ``df`` in a new ``data-<version>-<uuid>`` directory; return
+    (dir name, rows landed, zone map or None). Row count and per-column
+    [min, max] are observed BY THE WRITE JOB ITSELF, so they describe
+    exactly the rows that landed, with no second job: re-evaluating a
+    nondeterministic df (sample, rand, drifting source) would commit
+    zones that disagree with the written rows, turning
+    read_table_pruned's skipping into silent row loss. Zone values are
+    JSON-encoded (dates, timestamps and decimals stringify)."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"mn_{c}"))
-        aggs.append(F.max(c).alias(f"mx_{c}"))
-    row = df.agg(*aggs).collect()[0]
+    data_dir = f"data-{version:05d}-{uuid.uuid4().hex[:8]}"
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)), *[
+        agg(c).alias(f"{agg.__name__}{i}")
+        for i, c in enumerate(stats_cols) for agg in (F.min, F.max)
+    ]).write.mode("overwrite").parquet(os.path.join(path, data_dir))
+    n, *bounds = obs.get.values()
+    enc = [
+        v if v is None or isinstance(v, (int, float, str, bool)) else str(v)
+        for v in bounds
+    ]
+    zone = {c: enc[2 * i:2 * i + 2] for i, c in enumerate(stats_cols)}
+    return data_dir, n, zone or None
 
-    def enc(v):
-        return v if v is None or isinstance(v, (int, float, str, bool)) else str(v)
 
-    return {c: [enc(row[f"mn_{c}"]), enc(row[f"mx_{c}"])] for c in cols}
+def _commit_write(
+    path: str,
+    base: tuple[int, dict] | None,
+    df: DataFrame,
+    mode: str,
+    meta: dict | None = None,
+    stats_cols: list[str] | None = None,
+    keep: list[str] | tuple = (),
+    drop_empty: bool = False,
+) -> int:
+    """The one commit step of every writer: land ``df`` in a new dir
+    profiled on ``stats_cols``, carry the ``keep`` dirs of ``base``
+    (``(version, manifest)``, None for a new table) BY REFERENCE with
+    their zone maps, and commit the next version once. ``stats_cols``
+    None means the columns the replaced dirs tracked: a rewrite keeps
+    the table's zone maps. With ``drop_empty``, a frame that landed no
+    rows adds no dir (its never-referenced dir is removed). Returns the
+    version."""
+    version = 0 if base is None else base[0] + 1
+    old_stats = {} if base is None else base[1].get("stats", {})
+    stats = {d: old_stats[d] for d in keep if d in old_stats}
+    if stats_cols is None:
+        replaced = [d for d in base[1]["dirs"] if d not in keep]
+        stats_cols = sorted({c for d in replaced for c in old_stats.get(d, {})})
+    data_dir, n, zone = _write_dir(df, path, version, stats_cols)
+    dirs = list(keep)
+    if n or not drop_empty:
+        dirs.append(data_dir)
+        if zone:
+            stats[data_dir] = zone
+    else:
+        shutil.rmtree(os.path.join(path, data_dir))
+    _commit(path, version, dirs, mode, meta=meta, stats=stats or None)
+    return version
+
+
+def _snapshot(path: str, version: int | None = None) -> tuple[int, dict]:
+    """(version, manifest) of the latest or the given snapshot."""
+    v = latest_version(path) if version is None else version
+    if v is None:
+        raise FileNotFoundError(f"no committed versions at {path}")
+    return v, _read_manifest(path, v)
+
+
+def _scan(spark: SparkSession, path: str, dirs: list[str], schema=None):
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*[os.path.join(path, d) for d in dirs])
 
 
 def write_table(
@@ -333,29 +394,9 @@ def write_table(
     number."""
     if mode not in ("append", "overwrite"):
         raise ValueError(mode)
-    prev = latest_version(path)
-    version = 0 if prev is None else prev + 1
-    data_dir = f"data-{version:05d}-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(os.path.join(path, data_dir))
-    base = [] if (mode == "overwrite" or prev is None) else _read_manifest(
-        path, prev
-    )["dirs"]
-    stats = dict(
-        {} if (mode == "overwrite" or prev is None)
-        else _read_manifest(path, prev).get("stats", {})
-    )
-    if stats_cols:
-        # Stats come from the files just LANDED, not a re-evaluation of
-        # the input plan: a nondeterministic df (sample, drifting source)
-        # would otherwise commit zones that disagree with the written
-        # rows, turning read_table_pruned's skipping into silent row loss.
-        landed = df.sparkSession.read.parquet(os.path.join(path, data_dir))
-        stats[data_dir] = _column_stats(landed, stats_cols)
-    _commit(
-        path, version, base + [data_dir], mode, meta=meta,
-        stats=stats or None,
-    )
-    return version
+    base = None if latest_version(path) is None else _snapshot(path)
+    keep = [] if (mode == "overwrite" or base is None) else base[1]["dirs"]
+    return _commit_write(path, base, df, mode, meta, stats_cols or [], keep)
 
 
 def read_table(
@@ -363,13 +404,10 @@ def read_table(
 ) -> DataFrame:
     """Snapshot read: resolve the manifest (latest or the time-travel
     ``version``), then scan exactly its directories."""
-    v = latest_version(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    dirs = _read_manifest(path, v)["dirs"]
-    if not dirs:
+    v, manifest = _snapshot(path, version)
+    if not manifest["dirs"]:
         raise ValueError(f"version {v} is empty")
-    return spark.read.parquet(*[os.path.join(path, d) for d in dirs])
+    return _scan(spark, path, manifest["dirs"])
 
 
 def prune_dirs(
@@ -391,10 +429,7 @@ def prune_dirs(
     parquet footers — and a time-range query over a time-clustered table
     touches only the matching files. Pruning composes with (does not
     replace) parquet row-group min/max skipping inside each file."""
-    v = latest_version(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    manifest = _read_manifest(path, v)
+    _, manifest = _snapshot(path, version)
     stats = manifest.get("stats", {})
     selected = []
     for d in manifest["dirs"]:
@@ -427,12 +462,8 @@ def read_table_pruned(
 
     selected, _ = prune_dirs(path, col, lo, hi, version=version)
     if not selected:
-        v = latest_version(path) if version is None else version
-        empty = spark.read.parquet(
-            *[os.path.join(path, d) for d in _read_manifest(path, v)["dirs"]]
-        ).limit(0)
-        return empty
-    df = spark.read.parquet(*[os.path.join(path, d) for d in selected])
+        return read_table(spark, path, version).limit(0)
+    df = _scan(spark, path, selected)
     return df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
 
 
@@ -512,15 +543,17 @@ def merge_table(
     payload twice — replace-by-key collapses them instead, which is the
     upsert contract the IVM/stream sinks rely on. At scale the
     anti-join shuffles once on the key and AQE broadcasts a small CDC
-    batch against the big snapshot."""
-    current = read_table(spark, path)
+    batch against the big snapshot. The rewritten snapshot is profiled
+    on the columns the old one kept zone maps on."""
+    base = _snapshot(path)
+    current = read_table(spark, path, base[0])
     cols = current.columns
     if source.columns != cols:
         raise ValueError(f"source columns {source.columns} != table {cols}")
     merged = current.join(
         source.select(*key_cols).distinct(), key_cols, "left_anti"
     ).unionByName(source)
-    return write_table(merged, path, mode="overwrite", meta=meta)
+    return _commit_write(path, base, merged, "overwrite", meta)
 
 
 def _affected_dirs(hits, dirs: list[str], path: str) -> list[str]:
@@ -546,6 +579,42 @@ def _affected_dirs(hits, dirs: list[str], path: str) -> list[str]:
     return [d for d in dirs if d in owners]
 
 
+def _match(spark: SparkSession, path: str, predicate, count_key: str):
+    """The match pass delete_where and update_where share: ONE pass over
+    the latest snapshot counts matching rows per file (the collect is
+    O(files-with-matches), manifest-scale metadata, never rows); the
+    owning dirs are the rewrite scope. Rows where ``predicate`` (Column
+    or SQL string) is NULL do not match (SQL DELETE/UPDATE semantics).
+    Returns ``(base, hit, report, affected, scope)``: ``hit`` is the
+    NULL-safe match Column, ``report`` counts matches under
+    ``count_key``, and ``scope`` reads the affected dirs (the whole
+    snapshot when none) with the snapshot's schema, so no
+    schema-inference job runs."""
+    from pyspark.sql import functions as F
+
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    hit = F.coalesce(pred, F.lit(False))
+    base = _snapshot(path)
+    dirs = base[1]["dirs"]
+    full = _scan(spark, path, dirs)
+    hits = (
+        full.filter(hit)
+        .groupBy(F.input_file_name().alias("_f"))
+        .count()
+        .collect()
+    )
+    # a match no dir could be attributed to rewrites every dir:
+    # over-rewrite, never a missed rewrite
+    affected = _affected_dirs(hits, dirs, path) or (list(dirs) if hits else [])
+    report = {
+        count_key: int(sum(r["count"] for r in hits)),
+        "dirs_rewritten": len(affected),
+        "dirs_kept": len(dirs) - len(affected),
+    }
+    scope = _scan(spark, path, affected, full.schema) if affected else full
+    return base, hit, report, affected, scope
+
+
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -563,69 +632,26 @@ def delete_where(
     Returns ``(version, report)`` — report holds rows_deleted,
     dirs_rewritten, dirs_kept. A no-match delete commits NOTHING and
     returns ``(current_version, report)`` (idempotent re-runs don't
-    grow history).
+    grow history). Survivors of the affected dirs land in one new dir,
+    profiled on the tracked columns; no survivors, no new dir.
 
     Scale: ONE pass over the snapshot finds the affected directories
-    (a per-file match count — the collect is O(files-with-matches),
-    manifest-scale metadata, never rows); the rewrite scans only those
-    directories. On a time- or id-clustered table a targeted delete
-    touches a handful of files out of thousands — this is Delta/Iceberg
-    CoW DELETE semantics on the same manifest log write_table commits
-    through, so time travel still serves every pre-delete snapshot
-    until ``vacuum`` retention drops them (true erasure = delete +
-    vacuum, which the docstring of vacuum covers)."""
-    from pyspark.sql import functions as F
-
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    v = latest_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    manifest = _read_manifest(path, v)
-    dirs = manifest["dirs"]
-    old_stats = manifest.get("stats", {})
-    full = spark.read.parquet(*[os.path.join(path, d) for d in dirs])
-    hits = (
-        full.filter(F.coalesce(pred, F.lit(False)))
-        .groupBy(F.input_file_name().alias("_f"))
-        .count()
-        .collect()
+    (`_match`); the rewrite scans only those directories. On a time- or
+    id-clustered table a targeted delete touches a handful of files out
+    of thousands — this is Delta/Iceberg CoW DELETE semantics on the
+    same manifest log write_table commits through, so time travel still
+    serves every pre-delete snapshot until ``vacuum`` retention drops
+    them (true erasure = delete + vacuum, which the docstring of vacuum
+    covers)."""
+    base, hit, report, affected, scope = _match(
+        spark, path, predicate, "rows_deleted"
     )
-    rows_deleted = int(sum(r["count"] for r in hits))
-    report = {
-        "rows_deleted": rows_deleted,
-        "dirs_rewritten": 0,
-        "dirs_kept": len(dirs),
-    }
-    if rows_deleted == 0:
-        return v, report
-    affected = _affected_dirs(hits, dirs, path)
-    untouched = [d for d in dirs if d not in affected]
-    report["dirs_rewritten"] = len(affected)
-    report["dirs_kept"] = len(untouched)
-    survivors = spark.read.parquet(
-        *[os.path.join(path, d) for d in affected]
-    ).filter(~F.coalesce(pred, F.lit(False)))
-    version = v + 1
-    new_dirs = list(untouched)
-    stats = {d: old_stats[d] for d in untouched if d in old_stats}
-    # keep the zone-map discipline: re-profile the rewritten dir on the
-    # same columns the old manifest tracked (landed files, not the plan
-    # — see write_table's rationale)
-    stats_cols = sorted(
-        {c for d in affected for c in old_stats.get(d, {})}
-    )
-    if survivors.limit(1).count() > 0:
-        data_dir = f"data-{version:05d}-{uuid.uuid4().hex[:8]}"
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(path, data_dir)
-        )
-        new_dirs.append(data_dir)
-        if stats_cols:
-            landed = spark.read.parquet(os.path.join(path, data_dir))
-            stats[data_dir] = _column_stats(landed, stats_cols)
-    _commit(
-        path, version, new_dirs, "delete",
-        meta=meta, stats=stats or None,
+    if not report["rows_deleted"]:
+        return base[0], report
+    version = _commit_write(
+        path, base, scope.filter(~hit), "delete", meta,
+        keep=[d for d in base[1]["dirs"] if d not in affected],
+        drop_empty=True,
     )
     return version, report
 
@@ -653,37 +679,14 @@ def update_where(
     columns (an assignment may move a column's min/max)."""
     from pyspark.sql import functions as F
 
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    v = latest_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    manifest = _read_manifest(path, v)
-    dirs = manifest["dirs"]
-    old_stats = manifest.get("stats", {})
-    full = spark.read.parquet(*[os.path.join(path, d) for d in dirs])
-    unknown = set(assignments) - set(full.columns)
+    base, hit, report, affected, scope = _match(
+        spark, path, predicate, "rows_updated"
+    )
+    unknown = set(assignments) - set(scope.columns)
     if unknown:
         raise ValueError(f"assignments to unknown columns {sorted(unknown)}")
-    hits = (
-        full.filter(F.coalesce(pred, F.lit(False)))
-        .groupBy(F.input_file_name().alias("_f"))
-        .count()
-        .collect()
-    )
-    rows_updated = int(sum(r["count"] for r in hits))
-    report = {
-        "rows_updated": rows_updated,
-        "dirs_rewritten": 0,
-        "dirs_kept": len(dirs),
-    }
-    if rows_updated == 0:
-        return v, report
-    affected = _affected_dirs(hits, dirs, path)
-    untouched = [d for d in dirs if d not in affected]
-    report["dirs_rewritten"] = len(affected)
-    report["dirs_kept"] = len(untouched)
-    scope = spark.read.parquet(*[os.path.join(path, d) for d in affected])
-    hit = F.coalesce(pred, F.lit(False))
+    if not report["rows_updated"]:
+        return base[0], report
     exprs = {
         c: (F.expr(e) if isinstance(e, str) else e)
         for c, e in assignments.items()
@@ -731,18 +734,9 @@ def update_where(
         else F.col(c)
         for c in scope.columns
     ]
-    rewritten = scope.select(*cols)
-    version = v + 1
-    data_dir = f"data-{version:05d}-{uuid.uuid4().hex[:8]}"
-    rewritten.write.mode("overwrite").parquet(os.path.join(path, data_dir))
-    stats = {d: old_stats[d] for d in untouched if d in old_stats}
-    stats_cols = sorted({c for d in affected for c in old_stats.get(d, {})})
-    if stats_cols:
-        landed = spark.read.parquet(os.path.join(path, data_dir))
-        stats[data_dir] = _column_stats(landed, stats_cols)
-    _commit(
-        path, version, untouched + [data_dir], "update",
-        meta=meta, stats=stats or None,
+    version = _commit_write(
+        path, base, scope.select(*cols), "update", meta,
+        keep=[d for d in base[1]["dirs"] if d not in affected],
     )
     return version, report
 
@@ -778,10 +772,13 @@ def optimize_table(
     see a half-compacted table, and the pre-compaction version remains
     time-travelable until vacuumed. The streaming-append + periodic
     OPTIMIZE + vacuum loop is the standard lakehouse maintenance cycle
-    (operators/scale.py:compact_parquet is the raw-directory sibling)."""
-    current = read_table(spark, path)
-    return write_table(
-        current.repartition(target_files), path, mode="overwrite"
+    (operators/scale.py:compact_parquet is the raw-directory sibling).
+    The compacted directory is profiled on the snapshot's tracked
+    columns, so its zone map survives."""
+    base = _snapshot(path)
+    current = read_table(spark, path, base[0])
+    return _commit_write(
+        path, base, current.repartition(target_files), "overwrite"
     )
 
 
@@ -791,12 +788,7 @@ def fsck(path: str) -> dict:
     (corruption — reads will fail) and dirs present but referenced by no
     manifest (leaks — vacuum candidates or torn writes). Returns
     {'missing': [...], 'orphans': [...]}; empty lists = healthy."""
-    last = latest_version(path)
-    referenced: set[str] = set()
-    if last is not None:
-        for v in range(last + 1):
-            if os.path.exists(_manifest_path(path, v)):
-                referenced.update(_read_manifest(path, v)["dirs"])
+    referenced = {d for m in table_history(path) for d in m["dirs"]}
     on_disk = {
         e for e in os.listdir(path) if e.startswith("data-")
     } if os.path.isdir(path) else set()

@@ -838,7 +838,7 @@ def ivf_topk_from_index(
     assigned = spark.read.parquet(os.path.join(path, "assigned")).filter(
         F.col("list_id").isin(probe_ids)
     )
-    tomb = _ivf_tombstones(spark, path)
+    tomb = _tombstones(spark, path)
     if tomb is not None:
         # Deleted vectors are masked at serve time by a broadcast
         # anti-join against the bounded tombstone set — the pre-compaction
@@ -912,12 +912,13 @@ def _require_local_path(path: str, op: str) -> None:
         )
 
 
-def _ivf_tombstones(spark, path: str):
-    """Read the index's tombstone relation if any deletes are pending,
-    else None. The existence probe goes through the Hadoop FileSystem
-    API (ADVICE r9), so it is correct for ANY path Spark can read —
-    local, file://, hdfs://, s3a:// — one exists + one listStatus call,
-    index-metadata-sized, never a data scan."""
+def _tombstones(spark, path: str):
+    """Read an index's tombstone relation (the IVF index's here, the
+    MinHash index's in operators/dedup_index.py) if any deletes are
+    pending, else None. The existence probe goes through the Hadoop
+    FileSystem API (ADVICE r9), so it is correct for ANY path Spark can
+    read — local, file://, hdfs://, s3a:// — one exists + one listStatus
+    call, index-metadata-sized, never a data scan."""
     t = path.rstrip("/") + "/tombstones"
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(t)
@@ -1068,7 +1069,7 @@ def ivf_index_compact(spark, path: str) -> list:
 
     _require_local_path(path, "ivf_index_compact")
     _ivf_compact_recover(path)  # finish any prior committed compaction
-    tomb = _ivf_tombstones(spark, path)
+    tomb = _tombstones(spark, path)
     if tomb is None:
         return []
     affected = sorted(

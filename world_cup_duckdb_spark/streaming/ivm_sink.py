@@ -26,7 +26,6 @@ the tables + checkpoint, not in executor memory.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from world_cup_duckdb_spark.operators.ivm import maintain_join_view
@@ -36,7 +35,10 @@ from world_cup_duckdb_spark.operators.lakehouse import (
     table_history,
     write_table,
 )
-from world_cup_duckdb_spark.streaming.table_sink import _last_batch_id
+from world_cup_duckdb_spark.streaming.table_sink import (
+    _last_batch_id,
+    _keep_latest,
+)
 
 
 def _version_of_batch(path: str, batch_id: int) -> int:
@@ -65,21 +67,7 @@ def stream_maintain_join_view(
         if view_fence is not None and batch_id <= view_fence:
             return  # both tables already have this batch
         spark = batch_df.sparkSession
-        latest = (
-            batch_df.groupBy(*pk)
-            .agg(
-                F.max_by(
-                    F.struct("ts", "value", "event_id"),
-                    F.struct("ts", "event_id"),
-                ).alias("_s")
-            )
-            .select(
-                *pk,
-                F.col("_s.ts").alias("ts"),
-                F.col("_s.value").alias("value"),
-                F.col("_s.event_id").alias("event_id"),
-            )
-        )
+        latest = _keep_latest(batch_df, pk)
         fact_fence = _last_batch_id(fact_path)
         if fact_fence is None:
             write_table(latest, fact_path, meta={"batch_id": batch_id})

@@ -44,6 +44,22 @@ def _last_batch_id(path: str) -> int | None:
     return max(ids) if ids else None
 
 
+def _keep_latest(batch_df: DataFrame, keys: list[str]) -> DataFrame:
+    """One row per key: the newest event, ordered by (ts, event_id) so
+    ties on ts break deterministically."""
+    return batch_df.groupBy(*keys).agg(
+        F.max_by(
+            F.struct("ts", "value", "event_id"),
+            F.struct("ts", "event_id"),
+        ).alias("_s")
+    ).select(
+        *keys,
+        F.col("_s.ts").alias("ts"),
+        F.col("_s.value").alias("value"),
+        F.col("_s.event_id").alias("event_id"),
+    )
+
+
 def stream_upsert_table(
     events: DataFrame,
     path: str,
@@ -61,17 +77,7 @@ def stream_upsert_table(
         fence = _last_batch_id(path)
         if fence is not None and batch_id <= fence:
             return  # replay after recovery: already applied
-        latest = batch_df.groupBy(*keys).agg(
-            F.max_by(
-                F.struct("ts", "value", "event_id"),
-                F.struct("ts", "event_id"),
-            ).alias("_s")
-        ).select(
-            *keys,
-            F.col("_s.ts").alias("ts"),
-            F.col("_s.value").alias("value"),
-            F.col("_s.event_id").alias("event_id"),
-        )
+        latest = _keep_latest(batch_df, keys)
         if latest_version(path) is None:
             write_table(latest, path, meta={"batch_id": batch_id})
         else:
