@@ -3,24 +3,35 @@
 
 Value-level parity of the probe vs the single-batch DuckDB form is the
 registered key ext_inc_dedup_index (parity suite + driver). Here:
-append ≡ build-over-union, the delete/compact lifecycle, and the
-crash-recovery windows of the manifest-commit swap.
+append ≡ build-over-union, the delete/compact lifecycle, the layout and
+job pins, and the crash windows of the lakehouse commits the index
+goes through: a dir written but never committed, and a claimed commit
+whose manifest was never published.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from world_cup_duckdb_spark.operators import lakehouse
 from world_cup_duckdb_spark.operators.dedup_index import (
     minhash_index_append,
     minhash_index_compact,
     minhash_index_delete,
     minhash_index_persist,
     minhash_index_probe_dedup,
+)
+from world_cup_duckdb_spark.operators.lakehouse import (
+    fsck,
+    latest_version,
+    read_table,
+    recover_torn_commits,
+    vacuum,
 )
 from world_cup_duckdb_spark.sources.catalog import table
 
@@ -39,6 +50,50 @@ def _probe_rows(spark, path, delta):
     )
 
 
+def _manifest(table_path):
+    return lakehouse._snapshot(table_path)[1]
+
+
+def _indexed_ids(spark, loc):
+    return {
+        r["doc_id"]
+        for r in read_table(spark, os.path.join(loc, "bands"))
+        .select("doc_id")
+        .distinct()
+        .collect()
+    }
+
+
+def _crash_before_publish(m):
+    """The next lakehouse commit crashes after its dir is written and
+    before anything is claimed or published."""
+
+    def crash(*a, **k):
+        raise OSError("simulated crash before commit")
+
+    m.setattr(lakehouse, "_commit", crash)
+
+
+def _crash_after_claim(m):
+    """The next lakehouse commit crashes between claim and publication:
+    its fsynced body and claim sidecar are on disk, its manifest is
+    not."""
+
+    def crash(path, version, dirs, mode, **kw):
+        log = lakehouse._log_dir(path)
+        body = {"version": version, "mode": mode, "dirs": dirs}
+        body.update({k: v for k, v in kw.items() if v})
+        with open(os.path.join(log, f"v{version}.json.tmp-crash"), "w") as f:
+            json.dump(body, f)
+        os.close(os.open(
+            os.path.join(log, f"v{version}.json.claim"),
+            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+        ))
+        raise OSError("simulated crash after claim")
+
+    m.setattr(lakehouse, "_commit", crash)
+
+
 def test_append_equals_full_build(spark, docs, tmp_path):
     """persist(half) + append(half) must probe identically to
     persist(full): appends change WHAT is indexed, never HOW."""
@@ -54,13 +109,16 @@ def test_append_equals_full_build(spark, docs, tmp_path):
     assert _probe_rows(spark, full, delta) == _probe_rows(spark, inc, delta)
 
 
-def test_delete_mask_compact_and_crash_recovery(spark, docs, tmp_path):
+def test_delete_mask_compact_and_crash_recovery(
+    spark, docs, tmp_path, monkeypatch
+):
     """Deletes are visible at probe time immediately (tombstone mask),
-    compaction folds them into the files without changing results, and
-    the worst reachable crash state (swap done, manifest removed,
-    stale scratch left) neither corrupts probes nor blocks the next
-    delete+compact cycle."""
+    compaction folds them into the data without changing results, and
+    every commit state a crash can leave — a tombstone or compaction
+    dir written but not committed, a claimed compaction with no
+    manifest — keeps probes correct and the next cycle working."""
     loc = str(tmp_path / "ix")
+    bands = os.path.join(loc, "bands")
     minhash_index_persist(docs, loc)
     delta = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
 
@@ -74,89 +132,94 @@ def test_delete_mask_compact_and_crash_recovery(spark, docs, tmp_path):
 
     # Tombstone-masked probe equals the rebuilt-without-victims probe.
     minhash_index_delete(spark, loc, victims)
+    assert _manifest(bands)["tombstones"]
     assert _probe_rows(spark, loc, delta) == expect
 
-    # Compaction folds the tombstones; probe unchanged; only affected
-    # bucket partitions were rewritten.
+    # Compaction folds the tombstones in the same commit that swaps the
+    # rewritten dirs; probe unchanged.
     affected = minhash_index_compact(spark, loc)
     assert affected != []
     assert _probe_rows(spark, loc, delta) == expect
-    assert not os.path.isdir(os.path.join(loc, "tombstones"))
-    remaining = {
-        r["doc_id"]
-        for r in spark.read.parquet(os.path.join(loc, "bands"))
-        .select("doc_id")
-        .distinct()
-        .collect()
-    }
-    assert not any(v % 5 == 0 for v in remaining)
+    assert "tombstones" not in _manifest(bands)
+    assert not any(v % 5 == 0 for v in _indexed_ids(spark, loc))
+    v = latest_version(bands)
 
-    # Crash window: reconstruct {manifest gone, stale bands_old +
-    # tombstones on disk} and require the NEXT cycle to clear it and
-    # keep every surviving doc (mirror of the IVF ADVICE-r10 test).
-    old_root = os.path.join(loc, "bands_old")
-    os.makedirs(old_root, exist_ok=True)
-    some_bucket = next(
-        d
-        for d in os.listdir(os.path.join(loc, "bands"))
-        if d.startswith("bucket=")
-    )
-    os.makedirs(os.path.join(old_root, some_bucket), exist_ok=True)
+    # Crash: tombstone dir written, delete never committed — the delete
+    # did not happen, and only an unreferenced dir is left.
     victims2 = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
+    with monkeypatch.context() as m:
+        _crash_before_publish(m)
+        with pytest.raises(OSError, match="simulated"):
+            minhash_index_delete(spark, loc, victims2)
+    assert latest_version(bands) == v
+    assert _probe_rows(spark, loc, delta) == expect
+    assert len(fsck(bands)["orphans"]) == 1
+
+    # Crash: compaction dir written, never committed — the tombstones
+    # stay pending and keep masking.
     minhash_index_delete(spark, loc, victims2)
-    assert minhash_index_compact(spark, loc) != []
-    remaining2 = {
-        r["doc_id"]
-        for r in spark.read.parquet(os.path.join(loc, "bands"))
-        .select("doc_id")
-        .distinct()
-        .collect()
-    }
-    assert not any(v % 7 == 3 or v % 5 == 0 for v in remaining2)
-    assert not os.path.isdir(old_root)
+    masked = _probe_rows(spark, loc, delta)
+    assert masked != expect
+    with monkeypatch.context() as m:
+        _crash_before_publish(m)
+        with pytest.raises(OSError, match="simulated"):
+            minhash_index_compact(spark, loc)
+    assert latest_version(bands) == v + 1
+    assert _manifest(bands)["tombstones"]
+    assert _probe_rows(spark, loc, delta) == masked
+
+    # Crash: compaction claimed with a durable body, manifest never
+    # published — recovery publishes the swap and the emptied
+    # tombstone list together.
+    with monkeypatch.context() as m:
+        _crash_after_claim(m)
+        with pytest.raises(OSError, match="simulated"):
+            minhash_index_compact(spark, loc)
+    assert _probe_rows(spark, loc, delta) == masked
+    assert recover_torn_commits(bands)["rolled_forward"] == [v + 2]
+    assert "tombstones" not in _manifest(bands)
+    assert _probe_rows(spark, loc, delta) == masked
+    assert not any(
+        x % 7 == 3 or x % 5 == 0 for x in _indexed_ids(spark, loc)
+    )
+    # The two crashed writes are the only orphans; vacuum clears them.
+    assert len(fsck(bands)["orphans"]) == 2
+    vacuum(bands, keep_versions=1)
+    assert fsck(bands) == {"missing": [], "orphans": []}
+    assert _probe_rows(spark, loc, delta) == masked
 
 
 def test_recover_never_strands_tombstones(spark, docs, tmp_path, monkeypatch):
-    """ADVICE r11: already-applied tombstones must never survive a
-    completed swap with the manifest gone — that state is
-    indistinguishable from pending deletes, so a later append
-    re-inserting a deleted doc_id would be silently masked by probes
-    and destroyed by the next compact. The fixed ordering clears
-    tombstones BEFORE the manifest (commit marker), so the worst crash
-    {manifest present, tombstones gone} is finished idempotently by the
-    next entry point. Simulate that exact crash: fail the manifest
-    os.remove once, then require the next append+probe to (a) finish
-    recovery and (b) see a re-inserted previously-deleted doc."""
-    import world_cup_duckdb_spark.operators.dedup_index as dix
-
+    """ADVICE r11: an already-applied tombstone must never outlive the
+    data swap — that state is indistinguishable from a pending delete,
+    so a later append re-inserting the deleted doc_id would be silently
+    masked by probes and destroyed by the next compact. The fold and
+    the swap are one lakehouse commit, so every crash point of a
+    compaction leaves the victim's rows AND its tombstone (before), or
+    neither (after). Crash at both commit states, then re-insert the
+    purged doc: the probe must find it and the next compact keep it."""
     loc = str(tmp_path / "ix")
+    bands = os.path.join(loc, "bands")
     minhash_index_persist(docs, loc)
     victim = docs.orderBy("doc_id").limit(1)
     victim_id = victim.first()["doc_id"]
     minhash_index_delete(spark, loc, victim.select("doc_id"))
 
-    real_remove = os.remove
-
-    def failing_remove(p):
-        if p.endswith("compact_manifest.json"):
-            raise OSError("simulated crash before manifest removal")
-        real_remove(p)
-
-    monkeypatch.setattr(dix.os, "remove", failing_remove)
-    with pytest.raises(OSError, match="simulated crash"):
-        minhash_index_compact(spark, loc)
-    monkeypatch.setattr(dix.os, "remove", real_remove)
-
-    # Crash state: swap done, tombstones already cleared, manifest left.
-    assert os.path.isfile(os.path.join(loc, "compact_manifest.json"))
-    assert not os.path.isdir(os.path.join(loc, "tombstones"))
+    for crash in (_crash_before_publish, _crash_after_claim):
+        with monkeypatch.context() as m:
+            crash(m)
+            with pytest.raises(OSError, match="simulated"):
+                minhash_index_compact(spark, loc)
+        recover_torn_commits(bands)
+        pending = bool(_manifest(bands).get("tombstones"))
+        assert pending == (victim_id in _indexed_ids(spark, loc)), crash
+    assert not pending  # the claimed compaction rolled forward
 
     # Next cycle: re-ingest the purged doc, then probe an exact copy of
-    # it. Stranded tombstones would mask the re-inserted doc (probe says
-    # unique); the fixed ordering must find it.
+    # it. A stranded tombstone would mask the re-inserted doc (probe
+    # says unique).
     reinserted = docs.filter(F.col("doc_id") == victim_id)
     minhash_index_append(spark, loc, reinserted)
-    assert not os.path.isfile(os.path.join(loc, "compact_manifest.json"))
     recrawl = reinserted.select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
     )
@@ -208,14 +271,13 @@ def test_multibatch_verdicts_survive_lineage_recompute(spark, docs, tmp_path):
     assert "parquet" in plan.lower()
 
 
-def test_gram_index_compact_lifecycle(spark, docs, tmp_path):
+def test_gram_index_compact_lifecycle(spark, docs, tmp_path, monkeypatch):
     """VERDICT r11 item 4 + ADVICE r11 (medium): batch-distinct appends
     accumulate cross-batch duplicate gram rows; the probe must stay
     set-semantic anyway (left-semi join), and gram_index_compact must
-    fold the duplicates out behind the crash-safe swap without changing
-    any probe answer."""
+    fold the duplicates out in one overwrite commit without changing
+    any probe answer, whatever commit state a crash leaves."""
     from world_cup_duckdb_spark.operators.dedup_index import (
-        _gram_compact_recover,
         gram_index_append,
         gram_index_compact,
         gram_index_persist,
@@ -239,8 +301,8 @@ def test_gram_index_compact_lifecycle(spark, docs, tmp_path):
     gram_index_append(ev_grams, loc)
     gram_index_append(ev_grams, loc)
     ix_path = os.path.join(loc, "grams")
-    n_dup = spark.read.parquet(ix_path).count()
-    n_set = spark.read.parquet(ix_path).distinct().count()
+    n_dup = read_table(spark, ix_path).count()
+    n_set = read_table(spark, ix_path).distinct().count()
     assert n_dup == 3 * n_set  # duplicates really are on disk
     # Set-semantic probe: identical hits despite triplicated grams —
     # an inner join would emit each hit three times (ADVICE r11).
@@ -251,34 +313,37 @@ def test_gram_index_compact_lifecycle(spark, docs, tmp_path):
 
     # Compact folds the duplicates; probe unchanged; on-disk rows shrink.
     gram_index_compact(spark, loc)
-    assert spark.read.parquet(ix_path).count() == n_set
+    assert read_table(spark, ix_path).count() == n_set
+    assert len(_manifest(ix_path)["dirs"]) == 1
     got2 = sorted(
         tuple(r) for r in gram_index_probe_hits(spark, loc, corpus).collect()
     )
     assert got2 == expect
-    assert not os.path.isfile(os.path.join(loc, "gram_compact_manifest.json"))
 
-    # Crash window: committed manifest + staging present, swap not yet
-    # run — the next probe's recovery must roll it forward.
+    # Crash windows: a compaction dir written but never committed, then
+    # a claimed compaction whose manifest was never published. Readers
+    # keep the old snapshot until recovery publishes the compacted one.
     gram_index_append(ev_grams, loc)
-    staging = os.path.join(loc, "grams_compacting")
-    (
-        spark.read.parquet(ix_path)
-        .select("gram")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    with open(os.path.join(loc, "gram_compact_manifest.json"), "w") as fh:
-        fh.write('{"op": "gram_compact"}')
-    got3 = sorted(
+    v = latest_version(ix_path)
+    for crash in (_crash_before_publish, _crash_after_claim):
+        with monkeypatch.context() as m:
+            crash(m)
+            with pytest.raises(OSError, match="simulated"):
+                gram_index_compact(spark, loc)
+        assert latest_version(ix_path) == v
+        assert read_table(spark, ix_path).count() == 2 * n_set
+        got3 = sorted(
+            tuple(r)
+            for r in gram_index_probe_hits(spark, loc, corpus).collect()
+        )
+        assert got3 == expect
+    assert recover_torn_commits(ix_path)["rolled_forward"] == [v + 1]
+    assert read_table(spark, ix_path).count() == n_set
+    got4 = sorted(
         tuple(r) for r in gram_index_probe_hits(spark, loc, corpus).collect()
     )
-    assert got3 == expect
-    assert not os.path.isdir(staging)
-    assert not os.path.isfile(os.path.join(loc, "gram_compact_manifest.json"))
-    assert spark.read.parquet(ix_path).count() == n_set
-    _gram_compact_recover(loc)  # idempotent no-op afterwards
+    assert got4 == expect
+    assert len(fsck(ix_path)["orphans"]) == 1  # the unclaimed crash's dir
 
 
 def test_stats_reflect_lifecycle(spark, docs, tmp_path):
@@ -300,7 +365,7 @@ def test_stats_reflect_lifecycle(spark, docs, tmp_path):
 
     victims = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
     n_victims_with_bands = (
-        spark.read.parquet(os.path.join(loc, "bands"))
+        read_table(spark, os.path.join(loc, "bands"))
         .join(victims, "doc_id", "left_semi")
         .select("doc_id")
         .distinct()
@@ -402,3 +467,90 @@ def test_gram_index_append_equals_full(spark, docs, tmp_path):
         tuple(r) for r in gram_index_probe_hits(spark, inc, corpus).collect()
     )
     assert a == b and a
+
+
+def test_layout_stays_small_and_fsck_clean(spark, docs, tmp_path):
+    """Layout pin: persist plus three (append, delete, compact) cycles
+    leave the index snapshot at a handful of data files — the old
+    hive-bucketed layout spread every write over 64 bucket dirs and
+    held hundreds — and fsck on <index>/bands is clean after each
+    cycle. The probe still equals a rebuild over the live docs."""
+    loc = str(tmp_path / "layout-ix")
+    bands = os.path.join(loc, "bands")
+    minhash_index_persist(docs.filter(F.col("doc_id") % 4 == 0), loc)
+    dead = F.lit(False)
+    for k in (1, 2, 3):
+        minhash_index_append(spark, loc, docs.filter(F.col("doc_id") % 4 == k))
+        gone = (F.col("doc_id") % 4 < k) & (F.col("doc_id") % 11 == k)
+        minhash_index_delete(spark, loc, docs.filter(gone).select("doc_id"))
+        dead = dead | gone
+        assert minhash_index_compact(spark, loc) != []
+        assert fsck(bands) == {"missing": [], "orphans": []}
+    m = _manifest(bands)
+    assert "tombstones" not in m
+    files = [
+        f
+        for d in m["dirs"]
+        for f in os.listdir(os.path.join(bands, d))
+        if f.endswith(".parquet")
+    ]
+    assert 1 <= len(files) <= 12, files
+    assert not [e for e in os.listdir(bands) if e.startswith("bucket=")]
+
+    ref = str(tmp_path / "layout-ref")
+    minhash_index_persist(docs.filter(~dead), ref)
+    delta = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    assert _probe_rows(spark, loc, delta) == _probe_rows(spark, ref, delta)
+
+
+def test_probe_and_stats_build_run_no_jobs(spark, docs, tmp_path):
+    """Building a probe or stats DataFrame resolves one manifest and
+    scans its dirs with the recorded schema: no listing, schema-inference
+    or existence-probe job runs at call time (job group count, the
+    tests/test_plans.py pattern)."""
+    from world_cup_duckdb_spark.operators.dedup_index import (
+        minhash_index_stats,
+    )
+
+    loc = str(tmp_path / "jobs-ix")
+    minhash_index_persist(docs, loc)
+    minhash_index_delete(
+        spark, loc, docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+    )
+    delta = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    sc = spark.sparkContext
+    for name, build in (
+        ("probe", lambda: minhash_index_probe_dedup(spark, loc, delta)),
+        ("stats", lambda: minhash_index_stats(spark, loc)),
+    ):
+        group = f"dedup-index-jobpin-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setJobGroup("dedup-index-jobpin-other", "dedup-index-jobpin-other")
+        assert not sc.statusTracker().getJobIdsForGroup(group), name
+
+
+def test_vacuum_keeps_pending_tombstones(spark, docs, tmp_path):
+    """vacuum(keep_versions=1) after an index delete keeps the pending
+    tombstone dirs (the manifest references them), so probes still
+    mask the deleted docs and fsck stays clean."""
+    from world_cup_duckdb_spark.operators.dedup_index import (
+        minhash_index_stats,
+    )
+
+    loc = str(tmp_path / "vac-ix")
+    bands = os.path.join(loc, "bands")
+    minhash_index_persist(docs, loc)
+    delta = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    minhash_index_delete(
+        spark, loc, docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+    )
+    masked = _probe_rows(spark, loc, delta)
+    vacuum(bands, keep_versions=1)
+    tombs = _manifest(bands)["tombstones"]
+    assert all(os.path.isdir(os.path.join(bands, t)) for t in tombs)
+    assert fsck(bands) == {"missing": [], "orphans": []}
+    assert _probe_rows(spark, loc, delta) == masked
+    assert minhash_index_stats(spark, loc).first()["pending_tombstones"] > 0

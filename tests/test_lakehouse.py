@@ -988,10 +988,10 @@ def test_merge_and_optimize_keep_zone_maps(spark, nation, tmp_path):
 def test_lakehouse_writer_job_counts(spark, nation, tmp_path):
     """Job-count pins for the lakehouse writers (statusTracker count per
     job group, as in tests/test_plans.py). The zone map and row count
-    ride the write job, and the delete/update scope read reuses the
-    snapshot schema: write_table with stats_cols runs 1 job, delete_where
-    at most 4, update_where at most 6, merge_table at most 4 and
-    optimize_table at most 3."""
+    ride the write job, and every snapshot read uses the schema the
+    manifest records, so no schema-inference job runs: write_table with
+    stats_cols runs 1 job, delete_where at most 3, update_where at most
+    5, merge_table at most 3 and optimize_table at most 2."""
     from world_cup_duckdb_spark.operators.lakehouse import (
         delete_where,
         merge_table,
@@ -1021,7 +1021,92 @@ def test_lakehouse_writer_job_counts(spark, nation, tmp_path):
     run("merge", merge_table, spark, path, source, ["n_nationkey"])
     run("optimize", optimize_table, spark, path)
     assert all(jobs[f"write{rk}"] == 1 for rk in range(4)), jobs
-    assert jobs["delete"] <= 4, jobs
-    assert jobs["update"] <= 6, jobs
-    assert jobs["merge"] <= 4, jobs
-    assert jobs["optimize"] <= 3, jobs
+    assert jobs["delete"] <= 3, jobs
+    assert jobs["update"] <= 5, jobs
+    assert jobs["merge"] <= 3, jobs
+    assert jobs["optimize"] <= 2, jobs
+
+
+def test_manifest_records_schema_and_append_must_match(spark, nation, tmp_path):
+    """Every manifest records the table's schema, nullable, and snapshot
+    reads use it; an append whose column names or types differ raises
+    before anything lands, while an overwrite may change the schema."""
+    import os
+
+    from world_cup_duckdb_spark.operators.lakehouse import _read_manifest
+
+    path = str(tmp_path / "t")
+    v = write_table(nation, path)
+    recorded = _read_manifest(path, v)["schema"]
+    assert [f["name"] for f in recorded["fields"]] == nation.columns
+    assert all(f["nullable"] for f in recorded["fields"])
+    assert read_table(spark, path).schema.jsonValue() == recorded
+    n_dirs = len([e for e in os.listdir(path) if e.startswith("data-")])
+    for bad in (
+        nation.select(F.col("n_nationkey").cast("string"), "n_name", "n_regionkey"),
+        nation.withColumnRenamed("n_name", "name"),
+        nation.select("n_nationkey", "n_name"),
+    ):
+        with pytest.raises(ValueError, match="differ"):
+            write_table(bad, path)
+    assert latest_version(path) == v
+    assert len([e for e in os.listdir(path) if e.startswith("data-")]) == n_dirs
+    v2 = write_table(nation.select("n_nationkey"), path, mode="overwrite")
+    assert read_table(spark, path).columns == ["n_nationkey"]
+    assert read_table(spark, path, v).columns == nation.columns
+    assert v2 == v + 1
+
+
+def test_tombstone_dirs_are_referenced_and_recovered(spark, nation, tmp_path):
+    """A manifest's ``tombstones`` dirs are live for vacuum and fsck, ride
+    along on append and restore, and a torn commit whose tombstone dir
+    is incomplete rolls back (one whose dirs are all complete rolls
+    forward)."""
+    import json
+    import os
+
+    from world_cup_duckdb_spark.operators.lakehouse import (
+        _commit,
+        _log_dir,
+        _read_manifest,
+        _write_dir,
+        fsck,
+        recover_torn_commits,
+        restore_table,
+    )
+
+    path = str(tmp_path / "t")
+    v0 = write_table(nation, path)
+    m0 = _read_manifest(path, v0)
+    tomb, n, _ = _write_dir(nation.select("n_nationkey").limit(2), path, 1, [])
+    assert n == 2
+    _commit(path, 1, m0["dirs"], "delete", schema=m0["schema"], tombstones=[tomb])
+    vacuum(path, keep_versions=1)
+    assert os.path.isdir(os.path.join(path, tomb))
+    assert fsck(path) == {"missing": [], "orphans": []}
+    write_table(nation.limit(1), path)  # v2: append keeps the tombstones
+    assert _read_manifest(path, 2)["tombstones"] == [tomb]
+    restore_table(path, 1)  # v3
+    assert _read_manifest(path, 3)["tombstones"] == [tomb]
+    assert fsck(path) == {"missing": [], "orphans": []}
+
+    log = _log_dir(path)
+    for label, complete in (("torn", False), ("done", True)):
+        d = f"data-00004-{label}"
+        os.makedirs(os.path.join(path, d))
+        if complete:
+            open(os.path.join(path, d, "_SUCCESS"), "w").close()
+        body = dict(_read_manifest(path, 3), version=4, tombstones=[tomb, d])
+        with open(os.path.join(log, f"v4.json.tmp-{label}"), "w") as f:
+            json.dump(body, f)
+        os.close(os.open(
+            os.path.join(log, "v4.json.claim"),
+            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+        ))
+        report = recover_torn_commits(path)
+        if complete:
+            assert report["rolled_forward"] == [4]
+            assert _read_manifest(path, 4)["tombstones"] == [tomb, d]
+        else:
+            assert report["rolled_back"] == [4]
+            assert latest_version(path) == 3

@@ -8,30 +8,34 @@ training-data pipeline ALSO runs is the nightly form: "dedup this
 DELTA against the existing 100 TB corpus" — which must cost
 O(delta + one scan of the signature index), never a corpus recompute.
 
-This module persists the corpus's LSH band relation once and probes
-deltas against it:
+The index's band relation (doc_id, band, band_key) is a lakehouse table
+at ``<index>/bands`` (operators/lakehouse.py), so every index operation
+is one manifest commit and its crash safety is the lakehouse's: a
+reader sees the previous snapshot or the next one, and a torn commit is
+resolved by ``recover_torn_commits``. Banding parameters live in
+``<index>/index_meta.json``.
 
-- :func:`minhash_index_persist` — compute (doc_id, band, band_key)
-  with operators/dedup.py:minhash_bands (the SAME signature function
-  the batch and streaming paths use, so index-probe results are
-  comparable with batch-dedup results by construction) and write them
-  hive-partitioned by ``bucket = pmod(xxhash64(doc_id), n_buckets)``.
-  Doc-hash partitioning is for the DELETE lifecycle (compaction
-  rewrites only buckets containing victims), not probe pruning —
-  probes read every band row once, which for 8 signatures is
-  ~10⁻³ of corpus bytes.
-- :func:`minhash_index_append` — band the new docs against the saved
-  parameters and append files into the partitioned layout: O(delta),
-  old files untouched, readers never see a half-written partition.
-- :func:`minhash_index_delete` / :func:`minhash_index_compact` — the
-  lakehouse delete-vector pattern transplanted from the IVF index
-  (operators/similarity.py): deletes append doc-keyed tombstones that
-  probes mask with a broadcast anti-join; compaction rewrites ONLY
-  the affected ``bucket=…`` partitions behind the same crash-safe
-  manifest-commit + move-aside swap (with the r10-fixed ordering:
-  manifest removed the moment the swap completes, stale scratch
-  cleared before a new manifest is published).
+- :func:`minhash_index_persist` — compute the bands with
+  operators/dedup.py:minhash_bands (the SAME signature function the
+  batch and streaming paths use, so index-probe results are comparable
+  with batch-dedup results by construction) and commit them as one
+  data dir with a ``doc_id`` zone map.
+- :func:`minhash_index_append` — band ONLY the new docs and commit one
+  more data dir: O(delta), old dirs untouched.
+- :func:`minhash_index_delete` — write the ids to one tombstone dir and
+  commit a manifest that lists it under ``tombstones``; data dirs are
+  unchanged. Probes and stats mask tombstoned docs with a broadcast
+  anti-join.
+- :func:`minhash_index_compact` — rewrite only the data dirs whose
+  ``doc_id`` zone may hold a tombstoned id, minus those ids, into one
+  dir; the same commit swaps them in and empties the tombstone list, so
+  folding the tombstones and swapping the data are one atomic step.
+  Replaced dirs stay time-travelable until ``vacuum`` of
+  ``<index>/bands``.
 - :func:`minhash_index_probe_dedup` — the incremental dedup itself.
+
+Probe and stats resolve one manifest and scan exactly its dirs with
+the schema it records: building them runs no Spark job.
 
 Probe plan (the 100 TB story): the probe NEVER emits candidate pairs.
 Index bands are semi-joined to the broadcast delta band-key set (one
@@ -44,6 +48,10 @@ is a duplicate iff one of its buckets holds an indexed doc or a
 smaller-id delta doc; its canonical is the min such id. Everything is
 one exchange on (band, band_key) plus one on delta doc_id.
 
+The gram index (:func:`gram_index_persist` and friends) is the
+exact-substring twin: its distinct grams are a lakehouse table at
+``<index>/grams``.
+
 Equality pin (the judge-facing contract): probing a delta against an
 index built on the corpus is hash-identical to running the same
 min-per-bucket dedup over corpus ∪ delta in one batch — the registered
@@ -54,19 +62,20 @@ dedup surface at all; this extends the engine's LLM-pipeline tier.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from world_cup_duckdb_spark.operators import lakehouse
 from world_cup_duckdb_spark.operators.dedup import minhash_bands
 from world_cup_duckdb_spark.operators.similarity import (
-    _has_remote_scheme,
     _local_fs_path,
     _require_local_path,
-    _tombstones,
 )
 
 #: Sentinel used instead of NULL inside the per-bucket min reduction so
@@ -84,6 +93,10 @@ def _read_meta(path: str) -> dict:
         return json.load(fh)
 
 
+def _bands_table(path: str) -> str:
+    return os.path.join(_local_fs_path(path), "bands")
+
+
 def minhash_index_persist(
     docs: DataFrame,
     path: str,
@@ -92,13 +105,12 @@ def minhash_index_persist(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_words: int = 3,
-    n_buckets: int = 64,
 ) -> None:
     """Build and persist the signature index: one pass over the corpus
-    (map-side shingle/md5 work, no shuffle before the write), bands
-    written hive-partitioned by a doc-id hash bucket. Parameters are
-    saved so append/probe re-band with EXACTLY the same permutations —
-    an index probed with different seeds would silently find nothing."""
+    (map-side shingle/md5 work, no shuffle before the write), committed
+    as a fresh snapshot of one data dir. Parameters are saved so
+    append/probe re-band with EXACTLY the same permutations — an index
+    probed with different seeds would silently find nothing."""
     _require_local_path(path, "minhash_index_persist")
     bands = minhash_bands(
         docs,
@@ -107,19 +119,10 @@ def minhash_index_persist(
         num_hashes=num_hashes,
         band_size=band_size,
         shingle_words=shingle_words,
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        "band",
-        "band_key",
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets))
-        .cast("int")
-        .alias("bucket"),
+    ).select(F.col(id_col).alias("doc_id"), "band", "band_key")
+    lakehouse.write_table(
+        bands, _bands_table(path), "overwrite", stats_cols=["doc_id"]
     )
-    bands.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "bands")
-    )
-    local = _local_fs_path(path)
-    os.makedirs(local, exist_ok=True)
     tmp = _meta_path(path) + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(
@@ -127,7 +130,6 @@ def minhash_index_persist(
                 "num_hashes": num_hashes,
                 "band_size": band_size,
                 "shingle_words": shingle_words,
-                "n_buckets": n_buckets,
                 "text_col": text_col,
                 "id_col": id_col,
             },
@@ -151,146 +153,102 @@ def _delta_bands(path: str, docs: DataFrame) -> DataFrame:
 
 def minhash_index_append(spark, path: str, docs: DataFrame) -> None:
     """Extend the index with a new batch: band ONLY the new docs
-    (O(delta)) and append into the partitioned layout — parquet appends
-    add files without touching existing ones, so build-then-append is
+    (O(delta)) and commit them as one more data dir — existing dirs and
+    pending tombstones carry over by reference, so build-then-append is
     bit-identical to building over the union corpus (pinned in
     tests/test_dedup_index.py)."""
     _require_local_path(path, "minhash_index_append")
-    _compact_recover(path)
-    m = _read_meta(path)
-    (
-        _delta_bands(path, docs)
-        .select(
-            "doc_id",
-            "band",
-            "band_key",
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(m["n_buckets"]))
-            .cast("int")
-            .alias("bucket"),
-        )
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "bands"))
+    lakehouse.write_table(
+        _delta_bands(path, docs), _bands_table(path), stats_cols=["doc_id"]
+    )
+
+
+def _tombstones(spark, table: str, manifest: dict):
+    """The manifest's pending tombstone ids (a ``doc_id`` relation typed
+    like the bands'), or None when no delete is pending."""
+    if not manifest.get("tombstones"):
+        return None
+    doc_id = lakehouse._schema(manifest)["doc_id"]
+    return lakehouse._scan(
+        spark, table, manifest["tombstones"], StructType([doc_id])
     )
 
 
 def minhash_index_delete(
     spark, path: str, delete_ids: DataFrame, id_col: str = "doc_id"
 ) -> None:
-    """Remove docs from the index WITHOUT rewriting data: append
-    (doc_id, bucket) tombstones. O(batch); probes mask tombstoned docs
-    with a broadcast anti-join until compaction folds them out. The
-    bucket is recomputed from the id (pure hash), so no index scan is
-    needed even to locate victims."""
+    """Remove docs from the index WITHOUT rewriting data: write the ids
+    to one tombstone dir and commit it next to the unchanged data dirs.
+    O(batch), no shuffle: a repeated id only repeats a mask row. Probes
+    mask tombstoned docs until compaction folds them out. A batch with
+    no ids commits nothing."""
     _require_local_path(path, "minhash_index_delete")
-    _compact_recover(path)
-    m = _read_meta(path)
-    (
-        delete_ids.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .select(
-            "doc_id",
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(m["n_buckets"]))
-            .cast("int")
-            .alias("bucket"),
-        )
-        .write.mode("append")
-        .parquet(os.path.join(path, "tombstones"))
+    table = _bands_table(path)
+    version, m = lakehouse._snapshot(table)
+    doc_id = lakehouse._schema(m)["doc_id"].dataType
+    ids = delete_ids.select(
+        F.col(id_col).cast(doc_id).alias("doc_id")
+    ).dropna()
+    tomb, n, _ = lakehouse._write_dir(ids, table, version + 1, [])
+    if not n:
+        shutil.rmtree(os.path.join(table, tomb))
+        return
+    lakehouse._commit(
+        table, version + 1, m["dirs"], "delete",
+        stats=m.get("stats"), schema=m["schema"],
+        tombstones=m.get("tombstones", []) + [tomb],
     )
 
 
-def _compact_recover(path: str) -> None:
-    """Roll forward a committed-but-interrupted compaction — the same
-    crash-safe swap as operators/similarity.py:_ivf_compact_recover,
-    with the r10-FIXED ordering baked in from the start: the manifest
-    (commit point) is removed the moment the rename loop completes, so
-    an interrupted cleanup leaves only stale scratch that the next
-    compaction clears before publishing a new manifest — never a
-    manifest pointing at an already-swapped tree."""
-    if _has_remote_scheme(path):
-        return
-    local = _local_fs_path(path)
-    manifest = os.path.join(local, "compact_manifest.json")
-    if not os.path.isfile(manifest):
-        return
-    with open(manifest) as fh:
-        affected = json.load(fh)["affected"]
-    root = os.path.join(local, "bands")
-    staging = os.path.join(local, "bands_compacting")
-    old_root = os.path.join(local, "bands_old")
-    os.makedirs(old_root, exist_ok=True)
-    for b in affected:
-        a = os.path.join(root, f"bucket={b}")
-        s = os.path.join(staging, f"bucket={b}")
-        o = os.path.join(old_root, f"bucket={b}")
-        if os.path.isdir(a) and not os.path.isdir(o):
-            os.rename(a, o)
-        if os.path.isdir(s):
-            os.rename(s, a)
-    # Tombstones are folded in the moment the rename loop completes, so
-    # clear them BEFORE the manifest (the commit marker) is removed: a
-    # crash in between leaves {manifest present, tombstones gone}, which
-    # the next recovery finishes idempotently (the rename loop no-ops —
-    # each target already swapped — and the manifest is removed). The
-    # old ordering (manifest first) could strand already-applied
-    # tombstones with NO manifest, a state indistinguishable from
-    # legitimately pending deletes: a later append re-inserting a
-    # deleted doc_id would be silently masked by probes and destroyed by
-    # the next compact (ADVICE r11). Pinned in
-    # tests/test_dedup_index.py::test_recover_never_strands_tombstones.
-    # STRICT rmtree (no ignore_errors): a swallowed cleanup failure here
-    # would recreate the stranded state; raising leaves the manifest in
-    # place, so the next entry point retries the fold instead.
-    tomb = os.path.join(local, "tombstones")
-    if os.path.isdir(tomb):
-        shutil.rmtree(tomb)
-    os.remove(manifest)  # commit: swap + tombstone fold both complete
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old_root, ignore_errors=True)
+def _holding(manifest: dict, ids: list) -> list[str]:
+    """Data dirs whose ``doc_id`` zone may hold one of the sorted
+    ``ids``; a dir without a zone is assumed to (over-rewrite, never a
+    missed one)."""
+    stats = manifest.get("stats", {})
+    out = []
+    for d in manifest["dirs"]:
+        zone = stats.get(d, {}).get("doc_id")
+        if zone is not None:
+            lo, hi = zone
+            i = bisect.bisect_left(ids, lo) if lo is not None else len(ids)
+            if i == len(ids) or ids[i] > hi:
+                continue
+        out.append(d)
+    return out
 
 
 def minhash_index_compact(spark, path: str) -> list:
-    """Fold pending tombstones into the files: rewrite ONLY the
-    ``bucket=…`` partitions containing tombstoned docs (captured at
-    delete time — no scan to locate them), behind the manifest-commit
-    swap. Returns the affected bucket ids."""
+    """Fold pending tombstones into the data: rewrite ONLY the data dirs
+    whose ``doc_id`` zone map may hold a tombstoned id, minus those ids,
+    into one dir. The ids are collected once (pending deletes, not the
+    corpus) and filter the rewrite as a literal set, so no broadcast job
+    runs. One commit swaps the rewritten dirs and empties the tombstone
+    list. Returns the data dirs it rewrote."""
     _require_local_path(path, "minhash_index_compact")
-    _compact_recover(path)
-    tomb = _tombstones(spark, path)
+    table = _bands_table(path)
+    base = lakehouse._snapshot(table)
+    tomb = _tombstones(spark, table, base[1])
     if tomb is None:
         return []
-    affected = sorted(
-        r["bucket"] for r in tomb.select("bucket").distinct().collect()
+    ids = sorted({r["doc_id"] for r in tomb.collect()})
+    affected = _holding(base[1], ids)
+    survivors = lakehouse._scan(
+        spark, table, affected, lakehouse._schema(base[1])
+    ).filter(~F.col("doc_id").isin(ids))
+    lakehouse._commit_write(
+        table, base, survivors, "compact",
+        keep=[d for d in base[1]["dirs"] if d not in affected],
+        drop_empty=True,
     )
-    local = _local_fs_path(path)
-    # Clear scratch an interrupted post-swap cleanup may have left so
-    # the upcoming swap's renames never land on existing targets.
-    shutil.rmtree(os.path.join(local, "bands_old"), ignore_errors=True)
-    shutil.rmtree(
-        os.path.join(local, "bands_compacting"), ignore_errors=True
-    )
-    root = os.path.join(path, "bands")
-    survivors = (
-        spark.read.parquet(root)
-        .filter(F.col("bucket").isin(affected))
-        .join(F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            "band",
-            "band_key",
-            F.col("bucket").cast("int").alias("bucket"),
-        )
-    )
-    survivors.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(local, "bands_compacting")
-    )
-    manifest = os.path.join(local, "compact_manifest.json")
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"affected": affected}, fh)
-    os.replace(tmp, manifest)  # commit point: atomic publish
-    _compact_recover(path)  # roll forward = perform the swap
     return affected
+
+
+def _index(spark, path: str):
+    """(bands, tombstones or None) of the index's latest snapshot."""
+    table = _bands_table(path)
+    _, m = lakehouse._snapshot(table)
+    bands = lakehouse._scan(spark, table, m["dirs"], lakehouse._schema(m))
+    return bands, _tombstones(spark, table, m)
 
 
 def minhash_index_stats(spark, path: str) -> DataFrame:
@@ -300,13 +258,9 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
     LSH buckets, pending (unfolded) tombstoned docs, and the band rows
     those tombstones still mask. "Live" = tombstone-masked, exactly the
     relation probes see, so stats and probe semantics can never
-    disagree. One scan of the band files + one of the (usually tiny)
-    tombstone files; every count is an aggregate — nothing collects."""
-    _compact_recover(path)
-    bands = spark.read.parquet(os.path.join(path, "bands")).select(
-        "doc_id", "band", "band_key"
-    )
-    tomb = _tombstones(spark, path)
+    disagree. One scan of the band dirs + one of the (usually tiny)
+    tombstone dirs; every count is an aggregate — nothing collects."""
+    bands, tomb = _index(spark, path)
 
     def _agg(rel):
         return rel.agg(
@@ -323,7 +277,7 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
             F.lit(0).cast("long").alias("pending_tombstones"),
             F.lit(0).cast("long").alias("masked_band_rows"),
         )
-    tomb_ids = tomb.select("doc_id").distinct()
+    tomb_ids = tomb.distinct()
     live = bands.join(F.broadcast(tomb_ids), "doc_id", "left_anti")
     # Lazy single-row side aggregates cross-joined in (no driver-side
     # counts at plan-build time — the stats relation is as lazy as any
@@ -342,6 +296,10 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
     )
 
 
+def _grams_table(path: str) -> str:
+    return os.path.join(_local_fs_path(path), "grams")
+
+
 def gram_index_persist(grams: DataFrame, path: str) -> None:
     """Persist the DISTINCT k-gram relation of a contamination source
     (an eval benchmark suite, a licensed-content corpus) so later
@@ -351,86 +309,40 @@ def gram_index_persist(grams: DataFrame, path: str) -> None:
     parity (the committed span-family convention); the 8-byte
     xxhash64 storage form is the same transformation dup_spans_hashed
     applies and composes here unchanged. One distinct-aggregate
-    exchange, then a parquet write."""
-    (
-        grams.select("gram")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(path.rstrip("/") + "/grams")
+    exchange, then one overwrite commit."""
+    lakehouse.write_table(
+        grams.select("gram").distinct(), _grams_table(path), "overwrite"
     )
 
 
 def gram_index_append(grams: DataFrame, path: str) -> None:
     """Extend the persisted gram set with a new contamination batch:
-    append the batch's distinct grams. Each batch is distinct-ed only
-    within itself, so a gram present in two batches is stored twice —
-    harmless to probe SEMANTICS (the probe is a left-semi join: set
-    membership, duplicate index rows can't fan hits out), but duplicate
-    rows accumulate across appends and inflate probe-scan bytes, so an
-    append-heavy index should run :func:`gram_index_compact`
-    periodically (growth is bounded by sum-of-batch-distincts, worst
-    case n_batches × the true distinct count when every batch repeats
-    the same grams)."""
-    _gram_compact_recover(path)
-    (
-        grams.select("gram")
-        .distinct()
-        .write.mode("append")
-        .parquet(path.rstrip("/") + "/grams")
-    )
-
-
-def _gram_compact_recover(path: str) -> None:
-    """Roll forward a committed-but-interrupted gram compaction — same
-    manifest-commit + move-aside pattern as the minhash index, single
-    directory instead of per-bucket partitions."""
-    if _has_remote_scheme(path):
-        return
-    local = _local_fs_path(path)
-    manifest = os.path.join(local, "gram_compact_manifest.json")
-    if not os.path.isfile(manifest):
-        return
-    root = os.path.join(local, "grams")
-    staging = os.path.join(local, "grams_compacting")
-    old = os.path.join(local, "grams_old")
-    if os.path.isdir(root) and not os.path.isdir(old):
-        os.rename(root, old)
-    if os.path.isdir(staging):
-        os.rename(staging, root)
-    os.remove(manifest)  # commit: swap complete
-    shutil.rmtree(old, ignore_errors=True)
+    commit the batch's distinct grams as one more data dir. Each batch
+    is distinct-ed only within itself, so a gram present in two batches
+    is stored twice — harmless to probe SEMANTICS (the probe is a
+    left-semi join: set membership, duplicate index rows can't fan hits
+    out), but duplicate rows accumulate across appends and inflate
+    probe-scan bytes, so an append-heavy index should run
+    :func:`gram_index_compact` periodically (growth is bounded by
+    sum-of-batch-distincts, worst case n_batches × the true distinct
+    count when every batch repeats the same grams)."""
+    lakehouse.write_table(grams.select("gram").distinct(), _grams_table(path))
 
 
 def gram_index_compact(spark, path: str) -> None:
     """Rewrite the gram relation distinct, folding out the duplicate
     rows repeated appends accumulate (VERDICT r11 item 4 — the parity
-    gap with the minhash twin's delete/compact lifecycle). One
-    distinct-aggregate exchange over the index, written to a staging
-    dir and swapped in behind the same crash-safe manifest commit as
-    :func:`minhash_index_compact`: readers either see the old files or
-    the new ones, never a half-written mix, and an interrupted swap is
-    rolled forward by the next append/probe/compact."""
+    gap with the minhash twin's delete/compact lifecycle): one
+    distinct-aggregate exchange over the snapshot, committed as one
+    overwrite. Readers see the old snapshot or the compacted one, never
+    a mix; a crash before the commit leaves only an unreferenced dir."""
     _require_local_path(path, "gram_index_compact")
-    _gram_compact_recover(path)
-    local = _local_fs_path(path)
-    staging = os.path.join(local, "grams_compacting")
-    # Clear scratch an interrupted post-swap cleanup may have left so
-    # the upcoming swap's renames never land on existing targets.
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(os.path.join(local, "grams_old"), ignore_errors=True)
-    (
-        spark.read.parquet(path.rstrip("/") + "/grams")
-        .select("gram")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(staging)
+    table = _grams_table(path)
+    base = lakehouse._snapshot(table)
+    grams = lakehouse._scan(
+        spark, table, base[1]["dirs"], lakehouse._schema(base[1])
     )
-    manifest = os.path.join(local, "gram_compact_manifest.json")
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"op": "gram_compact"}, fh)
-    os.replace(tmp, manifest)  # commit point: atomic publish
-    _gram_compact_recover(path)  # roll forward = perform the swap
+    lakehouse._commit_write(table, base, grams.distinct(), "overwrite")
 
 
 def gram_index_probe_hits(
@@ -447,8 +359,7 @@ def gram_index_probe_hits(
     streaming decontaminator whose eval set must fit in a broadcast by
     contract. The probe output feeds the shared gaps-and-islands span
     merge."""
-    _gram_compact_recover(path)
-    ix = spark.read.parquet(path.rstrip("/") + "/grams")
+    ix = lakehouse.read_table(spark, _grams_table(path))
     return corpus_grams.join(ix, "gram", "left_semi").select(
         "doc_id", "pos"
     )
@@ -478,17 +389,13 @@ def minhash_index_probe_dedup(
     queries. The delta is bounded by contract (a batch, not a corpus),
     so the cut is the one-scan shape you'd ship; pass None to keep the
     probe fully lazy."""
-    _compact_recover(path)
     delta = _delta_bands(path, delta_docs)
     if cut is not None:
         delta = cut(delta)
-    index_bands = spark.read.parquet(os.path.join(path, "bands")).select(
-        "doc_id", "band", "band_key"
-    )
-    tomb = _tombstones(spark, path)
+    index_bands, tomb = _index(spark, path)
     if tomb is not None:
         index_bands = index_bands.join(
-            F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
+            F.broadcast(tomb), "doc_id", "left_anti"
         )
     # One index scan: kill every band row whose bucket has no delta
     # member before the aggregate (broadcast semi-join — the delta's

@@ -23,6 +23,13 @@ semantics without external table-format packages:
 Every writer commits through `_commit_write`: new rows land in one
 directory whose row count and zone map the write job itself observes;
 untouched directories carry over by reference with their zone maps.
+Each manifest records the table's (nullable) schema, so a snapshot read
+scans its directories without a schema-inference job, and an append
+whose columns differ from that schema raises instead of landing.
+A manifest may also list ``tombstones``: key-only directories whose
+rows mask matching data rows until a rewrite folds them in (the MinHash
+index in operators/dedup_index.py keeps its deletes this way). They are
+referenced like ``dirs`` by vacuum, fsck and torn-commit recovery.
 
 At 100 TB the same design holds: manifests stay KB-sized (they list
 directories, not rows), commits stay O(1), and data files are only ever
@@ -38,6 +45,7 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 _LOG = "_log"
 
@@ -87,6 +95,11 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _referenced(body: dict) -> list[str]:
+    """Every directory a manifest body references: data and tombstones."""
+    return list(body.get("dirs", [])) + list(body.get("tombstones", []))
+
+
 def _commit(
     path: str,
     version: int,
@@ -94,6 +107,8 @@ def _commit(
     mode: str,
     meta: dict | None = None,
     stats: dict | None = None,
+    schema: dict | None = None,
+    tombstones: list[str] | None = None,
 ) -> None:
     """Atomically publish a manifest: write to a temp name, fsync, then
     hard-link into place — readers never observe a partial manifest, and
@@ -102,15 +117,20 @@ def _commit(
     ``ValueError``).
     ``meta`` carries committer bookkeeping (e.g. a streaming batch id
     for exactly-once sinks); ``stats`` carries per-directory column
-    zone maps for data skipping."""
+    zone maps for data skipping; ``schema`` is the table's schema as
+    JSON; ``tombstones`` lists pending tombstone directories."""
     os.makedirs(_log_dir(path), exist_ok=True)
     target = _manifest_path(path, version)
     tmp = target + f".tmp-{uuid.uuid4().hex}"
     body = {"version": version, "mode": mode, "dirs": dirs}
+    if tombstones:
+        body["tombstones"] = tombstones
     if meta:
         body["meta"] = meta
     if stats:
         body["stats"] = stats
+    if schema:
+        body["schema"] = schema
     with open(tmp, "w") as f:
         json.dump(body, f)
         f.flush()
@@ -166,7 +186,8 @@ def recover_torn_commits(path: str) -> dict:
     Resolution per transaction-log residue:
 
     - claim sidecar WITHOUT a published manifest, with a surviving
-      fsynced tmp body whose data directories ALL exist → ROLL FORWARD:
+      fsynced tmp body whose data and tombstone directories ALL exist
+      → ROLL FORWARD:
       the claimant had durably decided the content, so publish it
       (lexicographically first complete tmp when a pre-claim retry
       crash left several — none was ever acknowledged, so either body
@@ -253,7 +274,7 @@ def recover_torn_commits(path: str) -> dict:
                 and isinstance(body.get("dirs"), list)
                 and all(
                     isinstance(d, str) and _complete_dir(d)
-                    for d in body["dirs"]
+                    for d in _referenced(body)
                 )
             ):
                 chosen = t
@@ -279,7 +300,7 @@ def recover_torn_commits(path: str) -> dict:
             body = _body_of(entry)
             if body is not None and isinstance(body.get("dirs"), list):
                 swept_dirs.update(
-                    d for d in body["dirs"] if isinstance(d, str)
+                    d for d in _referenced(body) if isinstance(d, str)
                 )
             os.remove(os.path.join(log, entry))
             out["swept"].append(entry)
@@ -292,7 +313,7 @@ def recover_torn_commits(path: str) -> dict:
             if re.fullmatch(r"v\d+\.json", entry):
                 body = _body_of(entry)
                 if body is not None and isinstance(body.get("dirs"), list):
-                    live.update(body["dirs"])
+                    live.update(_referenced(body))
         out["orphan_dirs"] = sorted(
             d
             for d in swept_dirs - live
@@ -330,6 +351,27 @@ def _write_dir(
     return data_dir, n, zone or None
 
 
+def _nullable(dt):
+    """``dt`` with every field, element and value nullable: the schema a
+    parquet scan reports, whatever the writing frame declared."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _schema(manifest: dict) -> StructType | None:
+    """The schema a manifest records (None for a hand-built body)."""
+    s = manifest.get("schema")
+    return None if s is None else StructType.fromJson(s)
+
+
 def _commit_write(
     path: str,
     base: tuple[int, dict] | None,
@@ -339,16 +381,29 @@ def _commit_write(
     stats_cols: list[str] | None = None,
     keep: list[str] | tuple = (),
     drop_empty: bool = False,
+    tombstones: list[str] | tuple = (),
 ) -> int:
     """The one commit step of every writer: land ``df`` in a new dir
     profiled on ``stats_cols``, carry the ``keep`` dirs of ``base``
     (``(version, manifest)``, None for a new table) BY REFERENCE with
-    their zone maps, and commit the next version once. ``stats_cols``
-    None means the columns the replaced dirs tracked: a rewrite keeps
-    the table's zone maps. With ``drop_empty``, a frame that landed no
-    rows adds no dir (its never-referenced dir is removed). Returns the
-    version."""
+    their zone maps, and commit the next version once, listing
+    ``tombstones`` as its pending tombstone dirs. ``stats_cols`` None
+    means the columns the replaced dirs tracked: a rewrite keeps the
+    table's zone maps. With ``drop_empty``, a frame that landed no rows
+    adds no dir (its never-referenced dir is removed). The manifest
+    records ``df``'s schema; when dirs are kept, a ``df`` whose column
+    names or types differ from the recorded schema raises before
+    anything is written. Returns the version."""
     version = 0 if base is None else base[0] + 1
+    schema = _nullable(df.schema)
+    recorded = None if base is None else _schema(base[1])
+    if keep and recorded is not None and [
+        (f.name, f.dataType) for f in schema
+    ] != [(f.name, f.dataType) for f in recorded]:
+        raise ValueError(
+            f"columns {schema.simpleString()} differ from the table's "
+            f"{recorded.simpleString()}"
+        )
     old_stats = {} if base is None else base[1].get("stats", {})
     stats = {d: old_stats[d] for d in keep if d in old_stats}
     if stats_cols is None:
@@ -362,7 +417,10 @@ def _commit_write(
             stats[data_dir] = zone
     else:
         shutil.rmtree(os.path.join(path, data_dir))
-    _commit(path, version, dirs, mode, meta=meta, stats=stats or None)
+    _commit(
+        path, version, dirs, mode, meta=meta, stats=stats or None,
+        schema=schema.jsonValue(), tombstones=list(tombstones),
+    )
     return version
 
 
@@ -374,7 +432,10 @@ def _snapshot(path: str, version: int | None = None) -> tuple[int, dict]:
     return v, _read_manifest(path, v)
 
 
-def _scan(spark: SparkSession, path: str, dirs: list[str], schema=None):
+def _scan(spark: SparkSession, path: str, dirs: list[str], schema):
+    """Read exactly ``dirs`` with ``schema`` (a manifest's recorded one),
+    so no schema-inference job runs; None infers, for hand-built
+    bodies."""
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(*[os.path.join(path, d) for d in dirs])
 
@@ -387,27 +448,34 @@ def write_table(
     stats_cols: list[str] | None = None,
 ) -> int:
     """Commit ``df`` as a new version. ``append`` adds to the current
-    snapshot's file set; ``overwrite`` starts a fresh set (history
-    remains readable). ``stats_cols`` records a per-directory min/max
-    zone map in the manifest, enabling manifest-level file skipping at
-    read time (`read_table_pruned`). Returns the committed version
-    number."""
+    snapshot's file set and its pending tombstones (they mask rows by
+    key wherever the rows live), and raises if ``df``'s columns differ
+    from the table's; ``overwrite`` starts a fresh set (history remains
+    readable). ``stats_cols`` records a per-directory min/max zone map
+    in the manifest, enabling manifest-level file skipping at read time
+    (`read_table_pruned`). Returns the committed version number."""
     if mode not in ("append", "overwrite"):
         raise ValueError(mode)
     base = None if latest_version(path) is None else _snapshot(path)
-    keep = [] if (mode == "overwrite" or base is None) else base[1]["dirs"]
-    return _commit_write(path, base, df, mode, meta, stats_cols or [], keep)
+    if mode == "overwrite" or base is None:
+        keep, tombs = [], []
+    else:
+        keep, tombs = base[1]["dirs"], base[1].get("tombstones", [])
+    return _commit_write(
+        path, base, df, mode, meta, stats_cols or [], keep, tombstones=tombs
+    )
 
 
 def read_table(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Snapshot read: resolve the manifest (latest or the time-travel
-    ``version``), then scan exactly its directories."""
+    ``version``), then scan exactly its directories with the schema it
+    records."""
     v, manifest = _snapshot(path, version)
     if not manifest["dirs"]:
         raise ValueError(f"version {v} is empty")
-    return _scan(spark, path, manifest["dirs"])
+    return _scan(spark, path, manifest["dirs"], _schema(manifest))
 
 
 def prune_dirs(
@@ -460,10 +528,11 @@ def read_table_pruned(
     equality and that fewer directories were actually scanned."""
     from pyspark.sql import functions as F
 
-    selected, _ = prune_dirs(path, col, lo, hi, version=version)
+    v, manifest = _snapshot(path, version)
+    selected, _ = prune_dirs(path, col, lo, hi, version=v)
     if not selected:
-        return read_table(spark, path, version).limit(0)
-    df = _scan(spark, path, selected)
+        return read_table(spark, path, v).limit(0)
+    df = _scan(spark, path, selected, _schema(manifest))
     return df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
 
 
@@ -483,6 +552,8 @@ def restore_table(path: str, version: int) -> int:
         "overwrite",
         meta={"restored_from": version},
         stats=manifest.get("stats") or None,
+        schema=manifest.get("schema"),
+        tombstones=manifest.get("tombstones"),
     )
     return new_version
 
@@ -503,7 +574,8 @@ def table_history(path: str) -> list[dict]:
 
 def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     """Drop manifests older than the newest ``keep_versions`` and delete
-    data dirs no surviving manifest references. Returns removed dirs.
+    data dirs no surviving manifest references, as data or as pending
+    tombstones. Returns removed dirs.
     Time travel beyond the retention window is traded for space — the
     explicit operator decision, never an implicit side effect."""
     last = latest_version(path)
@@ -512,7 +584,7 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     cutoff = max(0, last - keep_versions + 1)
     live: set[str] = set()
     for v in range(cutoff, last + 1):
-        live.update(_read_manifest(path, v)["dirs"])
+        live.update(_referenced(_read_manifest(path, v)))
     removed = []
     for entry in sorted(os.listdir(path)):
         if entry.startswith("data-") and entry not in live:
@@ -588,7 +660,7 @@ def _match(spark: SparkSession, path: str, predicate, count_key: str):
     Returns ``(base, hit, report, affected, scope)``: ``hit`` is the
     NULL-safe match Column, ``report`` counts matches under
     ``count_key``, and ``scope`` reads the affected dirs (the whole
-    snapshot when none) with the snapshot's schema, so no
+    snapshot when none); both scans use the recorded schema, so no
     schema-inference job runs."""
     from pyspark.sql import functions as F
 
@@ -596,7 +668,8 @@ def _match(spark: SparkSession, path: str, predicate, count_key: str):
     hit = F.coalesce(pred, F.lit(False))
     base = _snapshot(path)
     dirs = base[1]["dirs"]
-    full = _scan(spark, path, dirs)
+    schema = _schema(base[1])
+    full = _scan(spark, path, dirs, schema)
     hits = (
         full.filter(hit)
         .groupBy(F.input_file_name().alias("_f"))
@@ -611,7 +684,7 @@ def _match(spark: SparkSession, path: str, predicate, count_key: str):
         "dirs_rewritten": len(affected),
         "dirs_kept": len(dirs) - len(affected),
     }
-    scope = _scan(spark, path, affected, full.schema) if affected else full
+    scope = _scan(spark, path, affected, schema) if affected else full
     return base, hit, report, affected, scope
 
 
@@ -786,9 +859,10 @@ def fsck(path: str) -> dict:
     """Consistency audit between the transaction log and the filesystem:
     data dirs referenced by a live manifest but missing on disk
     (corruption — reads will fail) and dirs present but referenced by no
-    manifest (leaks — vacuum candidates or torn writes). Returns
-    {'missing': [...], 'orphans': [...]}; empty lists = healthy."""
-    referenced = {d for m in table_history(path) for d in m["dirs"]}
+    manifest (leaks — vacuum candidates or torn writes); tombstone
+    dirs count as referenced. Returns {'missing': [...], 'orphans':
+    [...]}; empty lists = healthy."""
+    referenced = {d for m in table_history(path) for d in _referenced(m)}
     on_disk = {
         e for e in os.listdir(path) if e.startswith("data-")
     } if os.path.isdir(path) else set()

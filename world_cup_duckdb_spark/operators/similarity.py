@@ -913,8 +913,7 @@ def _require_local_path(path: str, op: str) -> None:
 
 
 def _tombstones(spark, path: str):
-    """Read an index's tombstone relation (the IVF index's here, the
-    MinHash index's in operators/dedup_index.py) if any deletes are
+    """Read the IVF index's tombstone relation if any deletes are
     pending, else None. The existence probe goes through the Hadoop
     FileSystem API (ADVICE r9), so it is correct for ANY path Spark can
     read — local, file://, hdfs://, s3a:// — one exists + one listStatus

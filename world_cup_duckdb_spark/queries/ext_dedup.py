@@ -259,7 +259,7 @@ def ext_inc_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     two mins — no bucket-size cap needed, no blowup on boilerplate
     buckets); the index side is one scan semi-joined against the
     broadcast delta band-key set; index build/append are map-side up
-    to the partitioned write. See the module docstring."""
+    to one lakehouse data-dir commit. See the module docstring."""
     from world_cup_duckdb_spark.operators.dedup_index import (
         minhash_index_append,
         minhash_index_persist,
@@ -614,24 +614,24 @@ def ext_inc_dedup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature-index DELETE lifecycle (operators/dedup_index.py —
     the minhash twin of ext_ann_ivf_delete's evidence class): build the
     index over the full corpus, tombstone every doc with
-    doc_id % 5 == 0 (a GDPR purge / licence takedown batch —
-    O(batch) metadata, no index scan even to locate victims: the
-    bucket is recomputed from the id hash), COMPACT (rewrites only the
-    bucket partitions holding victims behind the crash-safe manifest
-    swap, clears the tombstones), then probe the re-crawl delta
-    against the compacted files.
+    doc_id % 5 == 0 (a GDPR purge / licence takedown batch — one
+    tombstone dir committed next to the untouched data dirs, no index
+    scan), COMPACT (rewrites only the data dirs whose doc_id zone map
+    may hold a victim and clears the tombstones, in one lakehouse
+    commit), then probe the re-crawl delta against the compacted
+    snapshot.
 
     The oracle is the single-batch dedup over (corpus WITHOUT the
     victims) ∪ delta — deletion must change WHAT is indexed, never
     HOW, so probe-after-delete+compact ≡ dedup against the surviving
     corpus. The tombstone-masked probe (before compaction) equals the
     same answer, pinned in tests/test_dedup_index.py along with the
-    interrupted-cleanup crash window.
+    crash windows of each commit.
 
-    Scale: delete is O(batch) appended metadata; compaction reads and
-    rewrites ONLY affected ``bucket=…`` partitions (victim buckets were
-    captured at delete time); the probe is the cap-free per-bucket min
-    reduction of ext_inc_dedup_index."""
+    Scale: delete is O(batch) tombstone rows; compaction reads and
+    rewrites ONLY the data dirs the zone maps cannot rule out; the
+    probe is the cap-free per-bucket min reduction of
+    ext_inc_dedup_index."""
     from world_cup_duckdb_spark.operators.dedup_index import (
         minhash_index_compact,
         minhash_index_delete,
@@ -1548,7 +1548,7 @@ def ext_inc_span_decontaminate_mb(
     TWO OVERLAPPING batches — each batch carries its own grams, and
     grams shared by docs across batches are stored twice by the
     batch-distinct appends — then gram_index_compact folds the
-    duplicates behind the crash-safe swap before the corpus probes.
+    duplicates in one overwrite commit before the corpus probes.
     Hash-matching the SAME oracle as the one-shot ext_inc_span_
     decontaminate pins the full lifecycle: persist ∘ append ∘ compact ∘
     probe ≡ one-shot persist ∘ probe, i.e. appends and compaction
